@@ -285,6 +285,36 @@ def test_confirm_hash_probe_equivalence(spark):
     assert got == plain
 
 
+def test_confirm_survives_real_hash_collision(spark):
+    """A seen url and a candidate url with EQUAL Spark murmur3 hashes
+    (found once by a birthday search over 300k generated urls): the
+    int-keyed probe matches the pair, and only the url residual keeps
+    the candidate new. Every candidate is forced through the exact
+    confirm (_maybe=True, as for a bloom false positive)."""
+    from vyntr_spark.operators.bloom import broadcast_anti_join, split_by_flag
+
+    in_seen = "http://collide.example/p11434.html"
+    in_cand = "http://collide.example/p276687.html"
+    pair = spark.createDataFrame([(in_seen,), (in_cand,)], "url string")
+    hashes = [r[0] for r in pair.select(F.hash("url")).collect()]
+    assert hashes[0] == hashes[1] == -1240487870
+    seen = spark.createDataFrame(
+        [(in_seen,), ("http://collide.example/old.html",)], "url string"
+    ).select(F.hash("url").alias("url_hash"), "url")
+    cand = spark.createDataFrame(
+        [(in_cand,), ("http://collide.example/old.html",)], "url string"
+    )
+    flagged = cand.withColumn("_maybe", F.lit(True))
+    for confirm, hash_col in (("broadcast", "url_hash"),
+                              ("broadcast", None), ("shuffle", None)):
+        got = [r["url"] for r in split_by_flag(
+            flagged, seen, confirm=confirm, seen_hash_col=hash_col
+        ).collect()]
+        assert got == [in_cand], (confirm, hash_col)
+    got = [r["url"] for r in broadcast_anti_join(cand, seen).collect()]
+    assert got == [in_cand]
+
+
 def test_release_drops_broadcast_then_rebuilds_on_demand(spark):
     """round-3 review: superseded per-round blooms must free their
     executor-resident broadcast eagerly. release() drops the memoized

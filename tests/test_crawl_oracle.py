@@ -153,6 +153,78 @@ def test_parity_with_frequent_compaction(spark, tmp_path, tiny_web):
     assert store.table("frontier").read().count() >= 0
 
 
+def test_parity_broadcast_flip_dedup(spark, tmp_path, tiny_web):
+    """Kill-and-resume parity with the exact dedup on the broadcast flip:
+    with auto-broadcast off, the tiny seen table counts as too big to
+    broadcast, so every round streams seen through a broadcast of its
+    candidates instead of taking the plain anti-join."""
+    rows, seeds = tiny_web
+    orc = run_oracle(_pages_map(rows), seeds, max_pages=10_000, seed=7)
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        store, infos = _run_engine(spark, tmp_path, rows, seeds, seed=7,
+                                   stop_after=2)
+    finally:
+        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    _assert_parity(store, infos, orc, rows)
+
+
+def test_exact_dedup_never_shuffles_seen(spark, tmp_path, monkeypatch):
+    """Plan pin for the default (non-bloom) dedup. A seen table within
+    the planner's auto-broadcast threshold takes the plain anti-join,
+    which broadcasts seen. Past the threshold, while the round's
+    candidates fit a broadcast, seen is streamed through broadcasts only
+    — no SortMergeJoin, no hash-partitioning Exchange. With the
+    broadcast cap forced to 0 the shuffled anti-join fallback returns
+    the same rows on every path."""
+    from vyntr_spark.crawl import CrawlEngine
+    from vyntr_spark.operators import bloom
+
+    store = SnapshotStore(spark, str(tmp_path / "wh"))
+    eng = CrawlEngine(spark, store, _pages_df(spark, []))
+    eng.init_from_seeds(
+        [f"http://h{i % 5}.example/p{i}.html" for i in range(2000)])
+    cand = spark.createDataFrame(
+        [(f"http://h{i % 5}.example/p{i}.html", f"h{i % 5}.example")
+         for i in range(1900, 2100)],
+        "url string, host string",
+    ).persist()
+    expected = sorted(
+        r["url"] for r in
+        cand.join(store.table("seen").read(), "url", "left_anti").collect()
+    )
+    assert len(expected) == 100
+
+    def plan_and_rows():
+        new, flagged = eng._dedup(cand, use_bloom=False)
+        assert flagged is None
+        return (new._jdf.queryExecution().executedPlan().toString(),
+                sorted(r["url"] for r in new.collect()))
+
+    plan, rows = plan_and_rows()
+    assert "LeftSemi" not in plan  # the plain anti-join, not the flip
+    assert "SortMergeJoin" not in plan
+    assert rows == expected
+
+    # the seen table counts as too big to broadcast from here on
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        plan, rows = plan_and_rows()
+        assert "LeftSemi" in plan  # the flip
+        assert "SortMergeJoin" not in plan
+        assert "Exchange hashpartitioning" not in plan
+        assert rows == expected
+
+        monkeypatch.setattr(bloom, "BROADCAST_CONFIRM_MAX_ROWS", 0)
+        plan, rows = plan_and_rows()
+        assert "LeftSemi" not in plan
+        assert "SortMergeJoin" in plan
+        assert rows == expected
+    finally:
+        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    cand.unpersist()
+
+
 def test_politeness_cap(spark, tmp_path):
     # 1 hot host with 40 pages + small hosts: ≤5/host/round (crawler.rs:28-48)
     rows = generate_pages(60, 2, seed=11)  # zipf: host0 hot
@@ -329,6 +401,50 @@ def test_priority_mode_parity_hub_web(spark, tmp_path):
     hub_urls = {u("hub.example", j) for j in (1, 2, 3)}
     assert hub_urls <= set(orc.rounds[1].selected)
     assert not (hub_urls & set(bfs.rounds[1].selected))
+
+
+def test_priority_mode_parity_half_up_rounding(spark, tmp_path):
+    """Priority parity where rounding to 6 places decides the budget
+    cut. Spark's round() on a double rounds the shortest decimal string
+    HALF_UP, so the depth-1 penalty -5e-7 becomes -1e-6, while
+    half-to-even on the binary value gives -0.0. Round 2 then holds two
+    x.example depth-1 pages (held back by the politeness cap, priority
+    -1e-6) and one h.example depth-2 page whose backlink term cancels
+    its penalty to +1e-7 -> 0.0; the budget takes one page, and only a
+    HALF_UP oracle picks the h.example page like the engine does."""
+    import datetime
+    import math
+
+    ts = datetime.datetime(2026, 1, 1)
+
+    def page(url, links=()):
+        body = "".join(f'<a href="{t}">l</a>' for t in links)
+        return {
+            "url": url, "warc_ts": ts,
+            "html": bytearray(f"<html><body><p>pg</p>{body}</body></html>"
+                              .encode()),
+            "text": "pg", "lang": "en", "content_type": "text/html",
+            "status": 200, "body_marker": "",
+        }
+
+    x = [f"http://x.example/p{i}.html" for i in range(8)]
+    s0, h0, h1 = ("http://s.example/p0.html", "http://h.example/p0.html",
+                  "http://h.example/p1.html")
+    rows = ([page(x[0], x[1:])] + [page(u) for u in x[1:]]
+            + [page(s0, [h0]), page(h0, [h1]), page(h1)])
+    seeds = [x[0], s0]
+    # rounds 0+1 fetch 2 + 6 pages, so round 2 has a budget of one page
+    kw = dict(max_pages=9, seed=5)
+    weights = dict(w_backlinks=1.1e-6 / math.log(2), w_depth=5e-7)
+
+    orc = run_oracle(_pages_map(rows), seeds, priority=True, **kw, **weights)
+    assert orc.rounds[2].selected == [h1]
+    store, infos = _run_engine(
+        spark, tmp_path, rows, seeds, priority_frontier=True,
+        priority_w_backlinks=weights["w_backlinks"],
+        priority_w_depth=weights["w_depth"], **kw,
+    )
+    _assert_parity(store, infos, orc, rows)
 
 
 def test_adaptive_rate_parity(spark, tmp_path):

@@ -20,9 +20,14 @@ final state as an uninterrupted run — tested against the sequential
 oracle in tests/test_crawl_oracle.py).
 
 Scale notes (10^10-URL frontier design):
-  * frontier/seen are hash-distributed on url; the seen anti-join is a
-    shuffled hash join locally and a bloom-shard prefilter + exact
-    anti-join on survivors in scale mode (operators/bloom.py).
+  * frontier/seen are hash-distributed on url; the seen anti-join never
+    shuffles seen while the round's candidates fit a broadcast: seen is
+    streamed once through a broadcast of the candidates and the (small)
+    hit set broadcasts back (operators/bloom.py broadcast_anti_join); a
+    seen table small enough for the planner to broadcast takes the plain
+    anti-join, which broadcasts seen itself. In scale mode a bloom-shard
+    prefilter shrinks the probe set to its survivors first; rounds too
+    large to broadcast fall back to the shuffled anti-join.
   * frontier commits are O(round delta) in the default 'log' mode:
     discovered rows APPEND, fetched urls APPEND to a removal log, and
     the view (base ∪ adds − removed) compacts to a fresh base every
@@ -87,7 +92,6 @@ class CrawlEngine:
         collect_debug: bool = False,
         use_bloom: bool | str = False,
         bloom_expected_n: int = 1_000_000,
-        bloom_confirm: str = "auto",
         bloom_crossover_rows: int = 40_000_000,
         io_coalesce: int | None = 4,
         parallel_commits: bool = True,
@@ -119,23 +123,21 @@ class CrawlEngine:
         self.collect_debug = collect_debug
         # use_bloom: False = exact anti-join, True = bloom prefilter,
         # 'auto' = cost-based pick (round-3 review): the bloom path only
-        # pays once the seen table is large enough that shuffling it per
-        # round beats the flag+confirm overhead — the measured operator
-        # crossover on this class of host is ~40M seen rows at bench
-        # candidate rates (BENCH/bloom_crossover.py: bloom 1.5x at 40M,
-        # 4.4x at 100M). 'auto' counts seen once on start/resume, tracks
-        # it incrementally (+n_new per round), and flips to the bloom
-        # path at bloom_crossover_rows — so the flag stops being a
-        # footgun on small crawls and stops being forgotten on big ones.
+        # pays once the seen table is large enough that its flag+confirm
+        # overhead beats probing seen with every candidate. The 40M-row
+        # default was measured (BENCH/bloom_crossover.py: bloom 1.5x at
+        # 40M, 4.4x at 100M) against the old exact path, which shuffled
+        # seen every round; the exact path now streams seen through a
+        # broadcast instead (_dedup), so the crossover is unverified
+        # until the curve is re-measured. 'auto' counts seen once on
+        # start/resume, tracks it incrementally (+n_new per round), and
+        # flips to the bloom path at bloom_crossover_rows — so the flag
+        # stops being a footgun on small crawls and stops being
+        # forgotten on big ones.
         self.use_bloom = use_bloom
         self.bloom_crossover_rows = bloom_crossover_rows
         self._seen_rows: int | None = None
         self.bloom_expected_n = bloom_expected_n
-        # exact-confirm strategy for bloom survivors: 'auto' counts the
-        # (persisted) survivor set per round and takes the broadcast flip
-        # while it fits — seen is then scanned once, never shuffled
-        # (operators/bloom.py split_by_flag); 'shuffle'/'broadcast' pin it
-        self.bloom_confirm = bloom_confirm
         # overlap the three independent round-tail jobs (frontier commit,
         # seen commit, metrics agg) via concurrent job submission — they
         # share only persisted inputs, and the per-table snapshot commit
@@ -184,8 +186,8 @@ class CrawlEngine:
         # seen-table snapshot id whose rows the bloom includes (checkpoint
         # watermark: resume catches up on just the appended delta)
         self._bloom_wm: int | None = None
-        # previous round's candidate count: bounds this round's bloom
-        # survivors for the free confirm-mode pick (see run_round)
+        # previous round's candidate count: bounds this round's probe
+        # set for the free dedup-strategy pick (_fits_broadcast)
         self._last_n_cand: int | None = None
         self._state_cache: tuple[int, int] | None = None
         # tracked frontier row count: lets a round skip the up-front
@@ -252,9 +254,10 @@ class CrawlEngine:
         """Cost-based dedup-path pick. Fixed modes pass through; 'auto'
         compares the seen-table row count (counted once on start/resume,
         then tracked incrementally — no per-round count job) against
-        bloom_crossover_rows, the measured regime boundary where the
-        bloom flag+confirm beats shuffling seen into the exact anti-join
-        (BENCH/bloom_crossover.py curve). The flip is one-way in
+        bloom_crossover_rows, the regime boundary where the bloom
+        flag+confirm beats the exact path (measured by
+        BENCH/bloom_crossover.py against the old shuffled exact path; see
+        __init__). The flip is one-way in
         practice (seen only grows), and correctness is path-independent:
         the bloom is a prefilter with an exact confirm, so both paths
         produce identical rounds (tested)."""
@@ -265,6 +268,68 @@ class CrawlEngine:
             self._seen_rows = (0 if seen_t.is_empty()
                                else seen_t.read().count())
         return self._seen_rows >= self.bloom_crossover_rows
+
+    def _fits_broadcast(self, probe: DataFrame) -> bool:
+        """Dedup-strategy rule, shared by the exact path (probe = the
+        round's candidates) and the bloom path's survivor confirm (probe
+        = the survivors): take the broadcast flip while the probe set
+        fits (a politeness-bounded round's candidates always do; seen
+        grows without bound — exactly the flip's regime). Steady state
+        is free: last round's candidate count bounds this round's ONLY
+        while growth stays modest — an outlink burst (budget change,
+        adaptive caps lifting) can multiply candidates round-over-round,
+        so the stale bound demands 8x headroom and anything closer to
+        the cap pays one count job over the (persisted) probe frame
+        instead of risking an out-of-memory broadcast."""
+        from .operators.bloom import BROADCAST_CONFIRM_MAX_ROWS
+
+        if (self._last_n_cand is not None
+                and self._last_n_cand * 8 <= BROADCAST_CONFIRM_MAX_ROWS):
+            return True
+        return probe.count() <= BROADCAST_CONFIRM_MAX_ROWS
+
+    def _dedup(self, cand: DataFrame,
+               use_bloom: bool) -> tuple[DataFrame, DataFrame | None]:
+        """The round's unseen candidates (C4): exactly
+        ``cand.join(seen, "url", "left_anti")`` on every path, so the
+        seen set never depends on the strategy. Returns ``(new,
+        flagged)``; ``flagged`` is the persisted bloom-flagged frame the
+        caller unpersists after the round (None on the exact path).
+        ``cand`` should be persisted — the strategy pick may count it
+        and the flip reads it twice."""
+        from .operators.bloom import (
+            broadcast_anti_join, flag_maybe, split_by_flag,
+        )
+
+        seen_t = self.store.table("seen")
+        if use_bloom:
+            # scale path: the bloom prefilter shrinks the probe set to its
+            # survivors; the exact confirm keeps it false-negative-free.
+            # Flag ONCE and persist — split_by_flag's two union branches
+            # both read the flagged frame.
+            if self._bloom is None:
+                self._bloom = self._load_or_build_bloom(seen_t)
+            flagged = flag_maybe(self._bloom, cand).persist()
+            confirm = ("broadcast"
+                       if self._fits_broadcast(flagged.filter(F.col("_maybe")))
+                       else "shuffle")
+            # the seen table stores url_hash = F.hash(url): the broadcast
+            # confirm keys its probe on the stored int (split_by_flag)
+            return split_by_flag(flagged, seen_t.read(), confirm=confirm,
+                                 seen_hash_col="url_hash"), flagged
+        seen = seen_t.read()
+        # a seen table within the planner's auto-broadcast threshold
+        # already makes the plain anti-join shuffle-free, with one
+        # broadcast (of seen) instead of the flip's two — measurably
+        # faster at ~10k seen rows; past it the plain join would shuffle
+        # all of seen every round, so the flip takes over
+        limit = (self.spark._jsparkSession.sessionState().conf()
+                 .autoBroadcastJoinThreshold())
+        seen_bytes = (seen._jdf.queryExecution().optimizedPlan().stats()
+                      .sizeInBytes())
+        if seen_bytes > limit and self._fits_broadcast(cand):
+            return broadcast_anti_join(cand, seen), None
+        return cand.join(seen, "url", "left_anti"), None
 
     # -- state -----------------------------------------------------------
     def _round_state(self) -> tuple[int, int]:
@@ -562,12 +627,10 @@ class CrawlEngine:
         # non-scaling cost: ~600 MB of text serialized through the
         # shuffle per round at sf0.1)
         n_out = self.io_coalesce
-        shuffle_commit = _os.environ.get("VYNTR_ANALYSES_SHUFFLE") == "1"
-        if n_out is not None and not shuffle_commit:
+        if n_out is not None:
             n_out = max(n_out, self.spark.sparkContext.defaultParallelism)
         self.store.table("analyses").commit(
-            analyses, "append", {"round": rnd}, coalesce=n_out,
-            shuffle=shuffle_commit,
+            analyses, "append", {"round": rnd}, coalesce=n_out, shuffle=False,
         )
         if obs_sel is not None:
             # the commit job materialized sel (broadcast build), firing the
@@ -588,47 +651,7 @@ class CrawlEngine:
             .observe(obs_cand, F.count(F.lit(1)).alias("n"))
             .persist()
         )
-        seen_t = self.store.table("seen")
-        flagged = None
-        if use_bloom_now:
-            # scale path (C4): bloom prefilter shrinks the shuffled side of
-            # the anti-join; exact confirm keeps it false-negative-free.
-            # Flag ONCE and persist — split_by_flag's two union branches
-            # both read the flagged frame.
-            from .operators.bloom import (
-                BROADCAST_CONFIRM_MAX_ROWS, flag_maybe, split_by_flag,
-            )
-
-            if self._bloom is None:
-                self._bloom = self._load_or_build_bloom(seen_t)
-            flagged = flag_maybe(self._bloom, cand).persist()
-            confirm = self.bloom_confirm
-            if confirm == "auto":
-                # take the broadcast flip while the survivor set fits (a
-                # politeness-bounded round's candidates always do; seen
-                # grows without bound — exactly the flip's regime).
-                # Steady state is free: survivors ≤ candidates, and last
-                # round's candidate count bounds this round's ONLY while
-                # growth stays modest — an outlink burst (budget change,
-                # adaptive caps lifting) can multiply candidates round-
-                # over-round, so the stale bound demands 8x headroom and
-                # anything closer to the 2M-row cap pays the one count
-                # job over the just-persisted flagged frame instead of
-                # risking a driver-OOM broadcast (round-3 review).
-                if (self._last_n_cand is not None
-                        and self._last_n_cand * 8 <= BROADCAST_CONFIRM_MAX_ROWS):
-                    confirm = "broadcast"
-                else:
-                    n_surv = flagged.filter(F.col("_maybe")).count()
-                    confirm = ("broadcast"
-                               if n_surv <= BROADCAST_CONFIRM_MAX_ROWS
-                               else "shuffle")
-            # the seen table stores url_hash = F.hash(url): the broadcast
-            # confirm keys its probe on the stored int (split_by_flag)
-            new = split_by_flag(flagged, seen_t.read(), confirm=confirm,
-                                seen_hash_col="url_hash")
-        else:
-            new = cand.join(seen_t.read(), "url", "left_anti")
+        new, flagged = self._dedup(cand, use_bloom_now)
         obs_new = Observation()
         new = new.observe(obs_new, F.count(F.lit(1)).alias("n")).persist()
 

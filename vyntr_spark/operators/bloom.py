@@ -408,12 +408,30 @@ class BloomShards:
 #: memory at one shard (the 10^10-URL layout: ~12 GB total, 1024 shards)
 BROADCAST_MAX_BYTES = 256 << 20
 
-#: survivor sets at or below this row count take the broadcast-flip
-#: confirm (seen scanned once through a BroadcastHashJoin, never
-#: shuffled); above it the classic shuffled anti-join confirms. ~2M urls
-#: of ~60 B ≈ 120 MB of broadcast — comfortably inside a 16 GB driver
-#: and the per-executor memory a real cluster provisions.
+#: probe sets (a round's candidates, or the bloom's survivors) at or
+#: below this row count take the broadcast flip (seen scanned once
+#: through a BroadcastHashJoin, never shuffled); above it the classic
+#: shuffled anti-join runs. ~2M urls of ~60 B ≈ 120 MB of broadcast —
+#: comfortably inside the memory a real cluster provisions per process.
 BROADCAST_CONFIRM_MAX_ROWS = 2_000_000
+
+
+def broadcast_anti_join(left: DataFrame, seen: DataFrame,
+                        url_col: str = "url") -> DataFrame:
+    """``left.join(seen, url_col, 'left_anti')`` by the broadcast flip.
+
+    ``seen`` is scanned once and streamed through a BroadcastHashJoin
+    against the broadcast ``left`` keys, yielding the (small) truly-seen
+    subset; that subset is broadcast back to anti-join ``left``. ``seen``
+    is never shuffled or sorted, so the cost is one scan of ``seen`` plus
+    two ``left``-sized broadcasts — the right regime whenever ``left``
+    fits a broadcast (``BROADCAST_CONFIRM_MAX_ROWS``) while ``seen``
+    grows without bound. Null-url rows of ``left`` pass through exactly
+    as in the plain anti-join (a null never equi-joins)."""
+    hits = seen.select(url_col).join(
+        F.broadcast(left.select(url_col)), url_col, "left_semi"
+    )
+    return left.join(F.broadcast(hits), url_col, "left_anti")
 
 
 def flag_maybe(bloom: BloomShards, candidates: DataFrame,
@@ -446,15 +464,13 @@ def split_by_flag(flagged: DataFrame, seen: DataFrame,
 
     * ``'shuffle'`` — plain left-anti SortMergeJoin. Shuffles BOTH sides,
       including the full ``seen`` table: O(|seen|) shuffle every round.
-    * ``'broadcast'`` — the flip: ``seen`` is scanned ONCE, streamed
-      through a BroadcastHashJoin against the broadcast survivor set to
-      yield the (tiny) truly-seen subset, which is broadcast back to
-      anti-join the survivors. ``seen`` is never shuffled or sorted —
-      the right regime whenever the per-round survivor set fits a
-      broadcast (``BROADCAST_CONFIRM_MAX_ROWS``), which a politeness-
-      bounded crawl round always does while ``seen`` grows without
-      bound. Null-url candidates pass through identically in both modes
-      (a null never equi-joins, so it confirms as unseen either way).
+    * ``'broadcast'`` — the flip (:func:`broadcast_anti_join`): ``seen``
+      is scanned ONCE and never shuffled or sorted — the right regime
+      whenever the per-round survivor set fits a broadcast
+      (``BROADCAST_CONFIRM_MAX_ROWS``), which a politeness-bounded crawl
+      round always does while ``seen`` grows without bound. Null-url
+      candidates pass through identically in both modes (a null never
+      equi-joins, so it confirms as unseen either way).
 
     ``seen_hash_col`` (broadcast mode): name of a PRECOMPUTED
     ``F.hash(url)`` int column on ``seen`` (the crawl's seen table
@@ -470,22 +486,19 @@ def split_by_flag(flagged: DataFrame, seen: DataFrame,
     """
     definitely_new = flagged.filter(~F.col("_maybe")).drop("_maybe")
     survivors = flagged.filter(F.col("_maybe")).drop("_maybe")
-    if confirm == "broadcast":
-        if seen_hash_col is not None:
-            sv_h = survivors.select(
-                F.hash(url_col).alias("_sv_h")).distinct()
-            hits = (
-                seen.join(F.broadcast(sv_h),
-                          seen[seen_hash_col] == sv_h["_sv_h"], "left_semi")
-                .join(F.broadcast(survivors.select(url_col)),
-                      url_col, "left_semi")
-                .select(url_col)
-            )
-        else:
-            hits = seen.select(url_col).join(
-                F.broadcast(survivors.select(url_col)), url_col, "left_semi"
-            )
+    if confirm == "broadcast" and seen_hash_col is not None:
+        sv_h = survivors.select(
+            F.hash(url_col).alias("_sv_h")).distinct()
+        hits = (
+            seen.join(F.broadcast(sv_h),
+                      seen[seen_hash_col] == sv_h["_sv_h"], "left_semi")
+            .join(F.broadcast(survivors.select(url_col)),
+                  url_col, "left_semi")
+            .select(url_col)
+        )
         confirmed_new = survivors.join(F.broadcast(hits), url_col, "left_anti")
+    elif confirm == "broadcast":
+        confirmed_new = broadcast_anti_join(survivors, seen, url_col)
     else:
         confirmed_new = survivors.join(
             seen.select(url_col), url_col, "left_anti"

@@ -25,12 +25,21 @@ from __future__ import annotations
 
 import hashlib
 from dataclasses import dataclass, field
+from decimal import ROUND_HALF_UP, Decimal
 
 from .canonicalize import try_domain, try_normalize
 from .extract import extract_html, sanitize_text
 from .gates import SUCCESS, classify, robots_match, url_path
 
 MAX_PER_DOMAIN = 5  # genesis/src/main.rs:175
+
+
+def spark_round6(x: float) -> float:
+    """Twin of Spark's ``F.round(col, 6)`` on a double: Spark rounds the
+    value's shortest decimal string HALF_UP, where Python's ``round()``
+    rounds the binary value half-to-even (-5e-7 gives -1e-6 in Spark,
+    -0.0 in Python)."""
+    return float(Decimal(repr(x)).quantize(Decimal("1e-6"), ROUND_HALF_UP))
 
 
 def shuffle_key(seed: int, rnd: int, url: str) -> str:
@@ -79,8 +88,9 @@ def run_oracle(
     ``priority=True`` simulates the engine's opt-in OPIC-style frontier
     mode (crawl.py priority_frontier; operators/scheduling.py
     with_frontier_priority) sequentially: every frontier row scores
-    ``round(w_backlinks * ln(1 + backlink_hosts) - w_depth * depth, 6)``
-    where backlink_hosts counts distinct OTHER hosts with an extracted
+    ``w_backlinks * ln(1 + backlink_hosts) - w_depth * depth`` rounded
+    to 6 places HALF_UP like Spark (:func:`spark_round6`), where
+    backlink_hosts counts distinct OTHER hosts with an extracted
     cross-host link to this host in rounds < the current one (the
     engine's host_edges table, committed per round after fetch), and
     both the per-host politeness pick AND the page-budget cut order by
@@ -146,9 +156,9 @@ def run_oracle(
                 indeg[dst] = indeg.get(dst, 0) + 1
 
             def key(e):
-                pri = round(
+                pri = spark_round6(
                     w_backlinks * math.log1p(indeg.get(e[2], 0))
-                    - w_depth * e[3], 6)
+                    - w_depth * e[3])
                 return (-pri, e[0], e[1])
         else:
             def key(e):
