@@ -44,7 +44,9 @@ from pyspark.sql import functions as F  # noqa: E402
 from vyntr_spark.operators.bloom import (  # noqa: E402
     BloomShards, flag_maybe, split_by_flag,
 )
-from vyntr_spark.session import get_spark, local_scratch_dir  # noqa: E402
+from vyntr_spark.session import (  # noqa: E402
+    get_spark, local_scratch_dir, size_bench_session,
+)
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 
@@ -65,10 +67,7 @@ def main() -> None:
     n_cand = int(sys.argv[2]) if len(sys.argv) > 2 else 2_000_000
     overlap = float(sys.argv[3]) if len(sys.argv) > 3 else 0.05
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    os.environ.setdefault("SPARK_DRIVER_MEM", "16g")
-    os.environ.setdefault("VYNTR_DRIVER_JAVA_OPTS",
-                          "-Xms16g -XX:+AlwaysPreTouch")
+    cpus = size_bench_session()
     spark = get_spark("bloom-crossover", master=f"local[{cpus}]",
                       shuffle_partitions=cpus,
                       extra={

@@ -20,9 +20,9 @@ Workload shape: n_pages=200k over 6k hosts (~33 pages/host) with
 politeness cap=1 — every round sweeps ~1 page x 6k hosts, so the crawl
 holds a FLAT steady state for ~33 rounds: any per-round IO growth is
 engine bloat, not workload ramp. priority_frontier=True exercises the
-host_edges append + compaction path; frontier_mode='log' (default) is
-the O(delta) commit path under test; compact_every=8 gives 4 compaction
-cycles in 34 rounds.
+host_edges append + compaction path; the frontier's append + removal
+log is the O(delta) commit path under test; compact_every=8 gives 4
+compaction cycles in 34 rounds.
 
 Output: one JSON line to stdout + BENCH/long_crawl_stress.json.
 Summary lands in BENCH/BASELINE.md.
@@ -39,7 +39,9 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 from vyntr_spark.crawl import CrawlEngine  # noqa: E402
-from vyntr_spark.session import get_spark, local_scratch_dir  # noqa: E402
+from vyntr_spark.session import (  # noqa: E402
+    get_spark, local_scratch_dir, size_bench_session,
+)
 from vyntr_spark.synth import (  # noqa: E402
     cached_pages_path_spark, default_seeds_web,
 )
@@ -63,13 +65,10 @@ def main() -> None:
     import shutil
     import tempfile
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = size_bench_session()
     n_pages = int(os.environ.get("STRESS_PAGES", "200000"))
     n_hosts = int(os.environ.get("STRESS_HOSTS", "6000"))
     max_rounds = int(os.environ.get("STRESS_ROUNDS", "34"))
-    os.environ.setdefault("SPARK_DRIVER_MEM", "16g")
-    os.environ.setdefault("VYNTR_DRIVER_JAVA_OPTS",
-                          "-Xms16g -XX:+AlwaysPreTouch")
     spark = get_spark("vyntr-stress", master=f"local[{cpus}]",
                       shuffle_partitions=cpus,
                       extra={"spark.sql.files.maxPartitionBytes": "16m",

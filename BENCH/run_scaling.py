@@ -129,10 +129,10 @@ Spark-generated via mapInPandas), n_pages={n_pages}, n_hosts={n_hosts}
 budget=n_pages. Python UDF workers, codegen and page cache warmed before
 the timed region (steady-state cluster conditions). Same job + same input
 at {len(levels)} parallelism levels, each pinned (taskset) to exactly its
-core count with a FIXED 16g JVM heap (per-executor heap is constant on a
-real cluster; see scaling_worker.py). Best of {repeats} interleaved
-repeats per level (shared noisy host), determinism hash must agree across
-every run.
+core count with a FIXED JVM heap of min(16 GiB, MemTotal/4)
+(per-executor heap is constant on a real cluster; see scaling_worker.py).
+Best of {repeats} interleaved repeats per level (shared noisy host),
+determinism hash must agree across every run.
 
 | parallelism | wall (s) | pages fetched | pages/s | frontier URLs/s | analyses hash |
 |---|---|---|---|---|---|

@@ -32,7 +32,9 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from vyntr_spark.crawl import CrawlEngine  # noqa: E402
 from vyntr_spark.operators.extract_udf import extract_udf  # noqa: E402
-from vyntr_spark.session import get_spark, local_scratch_dir  # noqa: E402
+from vyntr_spark.session import (  # noqa: E402
+    get_spark, local_scratch_dir, size_bench_session,
+)
 from vyntr_spark.synth import cached_pages_path_spark, default_seeds_web  # noqa: E402
 from vyntr_spark.tables import PAGES, SnapshotStore  # noqa: E402
 
@@ -53,16 +55,15 @@ def main() -> None:
     # JVM growing a tens-of-GB G1 heap page-faults new memory mid-job and
     # serializes on kernel page-zeroing (observed: sum(length(html)) over
     # the corpus 1.2s at Xmx16g vs 6.2s at Xmx64g on 32 threads).
-    os.environ.setdefault("SPARK_DRIVER_MEM", "16g")
-    # pre-fault the fixed heap at JVM start: a cluster's long-lived
+    # The heap is pre-faulted at JVM start: a cluster's long-lived
     # executors run with warm heaps, but a fresh benchmark JVM growing
-    # 16g mid-round serializes on kernel page-zeroing exactly during
+    # its heap mid-round serializes on kernel page-zeroing exactly during
     # the first (widest) round — measured as the round-1 scaling loss
     # (interleaved A/B at local[32]: 45.1/62.0 s pre-touched vs
     # 57.5/72.3 s control in the same windows; best round-1 wall on
-    # record, 14.9 s, came from a pre-touched run)
-    os.environ.setdefault("VYNTR_DRIVER_JAVA_OPTS",
-                          "-Xms16g -XX:+AlwaysPreTouch")
+    # record, 14.9 s, came from a pre-touched run). The CPUS argument,
+    # not the host's core count, sets the parallelism.
+    size_bench_session()
     spark = get_spark(f"scaling-{cpus}", master=f"local[{cpus}]",
                       shuffle_partitions=cpus,
                       extra={
@@ -90,13 +91,11 @@ def main() -> None:
     whdir = tempfile.mkdtemp(prefix=f"scal_wh_{cpus}_",
                              dir=local_scratch_dir())
     store = SnapshotStore(spark, whdir)
-    frontier_mode = os.environ.get("VYNTR_FRONTIER_MODE", "log")
     io_coalesce_env = os.environ.get("VYNTR_IO_COALESCE", "")
     io_coalesce = None if io_coalesce_env == "none" else \
         int(io_coalesce_env) if io_coalesce_env else cpus
     eng = CrawlEngine(spark, store, pages, max_pages=n_pages, seed=42,
-                      salt_buckets=32, io_coalesce=io_coalesce,
-                      frontier_mode=frontier_mode)
+                      salt_buckets=32, io_coalesce=io_coalesce)
     # cap seeds per host => round 1 is already a full-width politeness
     # round; zipf_s=0.25 keeps the tail hosts deep enough that EVERY round
     # sweeps ~cap*n_hosts pages (the wide-crawl steady state the north

@@ -13,7 +13,7 @@ local[$SPARK_GRAFT_CPUS]:
 
 Env:
   SPARK_GRAFT_SF_DIR   testdata dir (default /root/testdata/sf0.1)
-  SPARK_GRAFT_CPUS     cores for local[N] (default 32)
+  SPARK_GRAFT_CPUS     cores for local[N] (default: every core of the host)
   BENCH_QUERIES        comma list to restrict (debug)
   BENCH_BUDGET_S       wall-clock budget (default 600). Repeat samples
                        (the best-of-N retries for crawl/bloom/extract)
@@ -37,7 +37,9 @@ from pyspark.sql import functions as F  # noqa: E402
 import __spark_entry__ as entry_mod  # noqa: E402
 from vyntr_spark.crawl import CrawlEngine  # noqa: E402
 from vyntr_spark.operators.extract_udf import extract_udf  # noqa: E402
-from vyntr_spark.session import get_spark, local_scratch_dir  # noqa: E402
+from vyntr_spark.session import (  # noqa: E402
+    get_spark, local_scratch_dir, size_bench_session,
+)
 from vyntr_spark.synth import cached_pages_path_spark, default_seeds_web  # noqa: E402
 from vyntr_spark.tables import PAGES, SnapshotStore  # noqa: E402
 
@@ -64,16 +66,10 @@ def pages_scale(sf: float) -> tuple[int, int]:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    # same fixed heap as the scaling evidence (BENCH/scaling_worker.py):
-    # per-executor heap is constant on a real cluster, and 8g showed
-    # GC-pressure windows on the 32-thread crawl at sf0.1
-    os.environ.setdefault("SPARK_DRIVER_MEM", "16g")
-    # pre-fault the heap before the timed queries (see
-    # BENCH/scaling_worker.py — fresh-JVM heap growth otherwise lands
-    # as kernel page-zeroing stalls inside the first heavy entries)
-    os.environ.setdefault("VYNTR_DRIVER_JAVA_OPTS",
-                          "-Xms16g -XX:+AlwaysPreTouch")
+    # same fixed, pre-touched heap as the scaling evidence
+    # (BENCH/scaling_worker.py): per-executor heap is constant on a real
+    # cluster
+    cpus = size_bench_session()
     sf = sf_of(sf_dir)
     n_pages, n_hosts = pages_scale(sf)
 

@@ -121,16 +121,6 @@ def test_multi_round_full_crawl_parity(spark, tmp_path, tiny_web):
     _assert_parity(store, infos, orc, rows)
 
 
-def test_parity_replace_frontier_mode(spark, tmp_path, tiny_web):
-    """frontier_mode='replace' (the O(frontier)-rewrite fallback) must
-    produce the identical crawl."""
-    rows, seeds = tiny_web
-    orc = run_oracle(_pages_map(rows), seeds, max_pages=10_000, seed=7)
-    store, infos = _run_engine(spark, tmp_path, rows, seeds, seed=7,
-                               frontier_mode="replace")
-    _assert_parity(store, infos, orc, rows)
-
-
 def test_parity_with_frequent_compaction(spark, tmp_path, tiny_web):
     """compact_every=1 folds the delta log into a fresh base after every
     round — parity must hold and compaction snapshots must exist."""
@@ -151,6 +141,64 @@ def test_parity_with_frequent_compaction(spark, tmp_path, tiny_web):
         assert any(s.path == "" for s in snaps)
     # current state still reads fine after expiration
     assert store.table("frontier").read().count() >= 0
+
+
+@pytest.mark.parametrize("mode", [
+    {},
+    {"priority_frontier": True, "adaptive_rate": True},
+], ids=["default", "priority_adaptive"])
+def test_round_commit_contract(spark, tmp_path, tiny_web, monkeypatch, mode):
+    """The snapshot contract of a round, which resume and the bench
+    tracer rely on: every round table gets exactly one {"round": r}
+    snapshot per round r, round_state is the last {"round": r} commit of
+    its round, and maintenance snapshots carry {"compact_round": r} only
+    on cadence rounds, after that round's round_state."""
+    from vyntr_spark.tables import SnapshotTable
+
+    calls = []  # (table, summary) in completion order
+    real_commit, real_rows = SnapshotTable.commit, SnapshotTable.commit_rows
+
+    def commit(tbl, df, mode="append", summary=None, **kw):
+        sid = real_commit(tbl, df, mode, summary, **kw)
+        calls.append((tbl.name, dict(summary or {})))
+        return sid
+
+    def commit_rows(tbl, rows, mode="append", summary=None):
+        sid = real_rows(tbl, rows, mode, summary)
+        calls.append((tbl.name, dict(summary or {})))
+        return sid
+
+    monkeypatch.setattr(SnapshotTable, "commit", commit)
+    monkeypatch.setattr(SnapshotTable, "commit_rows", commit_rows)
+    rows, seeds = tiny_web
+    store, infos = _run_engine(spark, tmp_path, rows, seeds, seed=7,
+                               max_rounds=3, compact_every=2, **mode)
+    assert [i.round for i in infos] == [0, 1, 2]
+
+    round_tables = {"analyses", "frontier", "frontier_removed", "seen",
+                    "metrics", "round_state"}
+    if mode:
+        round_tables |= {"host_stats", "host_edges"}
+    compacted = {"frontier", "frontier_removed"} | (
+        {"host_edges"} if mode else set())
+    for name in sorted(store.SCHEMAS):
+        snaps = store.table(name).snapshots()
+        rounds = [s.summary["round"] for s in snaps if "round" in s.summary]
+        compacts = [s.summary["compact_round"] for s in snaps
+                    if "compact_round" in s.summary]
+        assert rounds == ([0, 1, 2] if name in round_tables else []), name
+        assert compacts == ([1] if name in compacted else []), name
+
+    for r in range(3):
+        in_round = [t for t, summ in calls if summ.get("round") == r]
+        assert in_round[-1] == "round_state", (r, in_round)
+    # maintenance runs after its round's commit point, before the next round
+    order = [(t, summ.get("round"), summ.get("compact_round"))
+             for t, summ in calls]
+    state_1 = order.index(("round_state", 1, None))
+    first_2 = next(i for i, c in enumerate(order) if c[1] == 2)
+    assert sorted(t for t, _r, c in order[state_1 + 1:first_2]
+                  if c == 1) == sorted(compacted)
 
 
 def test_parity_broadcast_flip_dedup(spark, tmp_path, tiny_web):

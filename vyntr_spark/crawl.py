@@ -28,21 +28,24 @@ Scale notes (10^10-URL frontier design):
     anti-join, which broadcasts seen itself. In scale mode a bloom-shard
     prefilter shrinks the probe set to its survivors first; rounds too
     large to broadcast fall back to the shuffled anti-join.
-  * frontier commits are O(round delta) in the default 'log' mode:
-    discovered rows APPEND, fetched urls APPEND to a removal log, and
-    the view (base ∪ adds − removed) compacts to a fresh base every
-    compact_every rounds — the Parquet-fallback analog of Iceberg
-    MERGE/positional deletes (frontier_mode='replace' keeps the plain
-    O(frontier) rewrite for comparison).
+  * frontier commits are O(round delta): discovered rows APPEND,
+    fetched urls APPEND to a removal log, and the view (base ∪ adds −
+    removed) compacts to a fresh base every compact_every rounds — the
+    Parquet-fallback analog of Iceberg MERGE/positional deletes.
+  * run_round is a fixed sequence of named phases over one _Round
+    state object: select, fetch-extract, expand, tail (the independent
+    commits, submitted together), record (metrics, then round_state
+    last) and maintain.
   * no global rank anywhere: ordering is the composite (round, url).
 """
 
 from __future__ import annotations
 
+import os
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .canonicalize import try_domain, try_normalize
@@ -63,6 +66,11 @@ def _obs_count(obs, df: DataFrame) -> int:
         return df.count()
 
 
+def _md5_partition():
+    """Lineage partition of a url: the first two hex digits of its md5."""
+    return F.substring(F.md5(F.encode(F.col("url"), "utf-8")), 1, 2)
+
+
 @dataclass
 class RoundInfo:
     round: int
@@ -75,6 +83,30 @@ class RoundInfo:
     selected_urls: list[str] = field(default_factory=list)
     outcomes: dict[str, str] = field(default_factory=dict)
     new_url_list: list[str] = field(default_factory=list)
+
+
+@dataclass
+class _Round:
+    """One round's state, handed from phase to phase by run_round."""
+    rnd: int
+    pages_count: int
+    fsize: int  # tracked frontier size at the start of the round
+    use_bloom: bool
+    t0: float
+    n_sel: int = -1  # -1 until the analyses commit fires obs_sel
+    obs_sel: Observation | None = None
+    obs_cand: Observation = field(default_factory=Observation)
+    obs_new: Observation = field(default_factory=Observation)
+    sel: DataFrame | None = None  # the batch, reference frontier schema
+    sel_cached: DataFrame | None = None  # its persisted frame
+    fetched_slim: DataFrame | None = None
+    outcome_rows: DataFrame | None = None
+    outcome_hosts: DataFrame | None = None
+    extracted: DataFrame | None = None
+    cand: DataFrame | None = None
+    new: DataFrame | None = None
+    flagged: DataFrame | None = None
+    part_rows: list = field(default_factory=list)
 
 
 class CrawlEngine:
@@ -94,8 +126,6 @@ class CrawlEngine:
         bloom_expected_n: int = 1_000_000,
         bloom_crossover_rows: int = 40_000_000,
         io_coalesce: int | None = 4,
-        parallel_commits: bool = True,
-        frontier_mode: str = "log",
         compact_every: int = 8,
         adaptive_rate: bool = False,
         rate_window: int = 3,
@@ -138,20 +168,11 @@ class CrawlEngine:
         self.bloom_crossover_rows = bloom_crossover_rows
         self._seen_rows: int | None = None
         self.bloom_expected_n = bloom_expected_n
-        # overlap the three independent round-tail jobs (frontier commit,
-        # seen commit, metrics agg) via concurrent job submission — they
-        # share only persisted inputs, and the per-table snapshot commit
-        # was never atomic across tables anyway (round_state, committed
-        # last, remains the round's durability barrier)
-        self.parallel_commits = parallel_commits
-        # frontier_mode='log' (default): each round APPENDS the new rows
-        # and the selected urls to a removal log — O(round delta) IO, the
-        # parquet-fallback analog of Iceberg MERGE + positional deletes.
-        # The materialized view (base ∪ adds − removed) is compacted to a
-        # replace snapshot every `compact_every` rounds so the anti-join
-        # side stays bounded. 'replace' keeps the old O(frontier)
-        # rewrite-per-round (VERDICT r1 called it the load-bearing gap).
-        self.frontier_mode = frontier_mode
+        # each round APPENDS the new rows and the selected urls to a
+        # removal log — O(round delta) IO, the parquet-fallback analog of
+        # Iceberg MERGE + positional deletes. Every `compact_every` rounds
+        # maintenance compacts the view (base ∪ adds − removed) to a
+        # replace snapshot so the anti-join side stays bounded.
         self.compact_every = compact_every
         # AIMD politeness (C6 extension, operators/scheduling.py): each
         # round appends per-host fetch aggregates to the host_stats table
@@ -198,8 +219,6 @@ class CrawlEngine:
 
     # -- bloom checkpoint (C4 scale path maintenance) ----------------------
     def _bloom_ckpt_path(self) -> str:
-        import os
-
         return os.path.join(self.store.root, "bloom_ckpt.parquet")
 
     def _load_or_build_bloom(self, seen_t):
@@ -215,8 +234,6 @@ class CrawlEngine:
         make the loaded bloom MISS recent rows — which the catch-up then
         re-adds (false negatives against committed seen would re-crawl
         duplicates; this path cannot produce them)."""
-        import os
-
         from .operators.bloom import BloomShards
 
         p = self._bloom_ckpt_path()
@@ -336,7 +353,7 @@ class CrawlEngine:
         """(next_round, pages_count): cached in-engine after each round; the
         round_state table is only read on start/resume (one fewer Spark job
         per round; the table stays the durable source of truth)."""
-        if getattr(self, "_state_cache", None) is not None:
+        if self._state_cache is not None:
             return self._state_cache
         t = self.store.table("round_state")
         if t.is_empty():
@@ -383,69 +400,82 @@ class CrawlEngine:
         self.store.table("frontier").commit(frontier_df, "replace",
                                             {"stage": "seeds"},
                                             coalesce=self.io_coalesce)
-        if self.frontier_mode == "log":
-            # reset the removal log alongside the fresh base
-            self.store.table("frontier_removed").commit(
-                self.spark.createDataFrame([], "url string, round int"),
-                "replace", {"stage": "seeds"}, coalesce=1,
-            )
+        # reset the removal log alongside the fresh base
+        self._reset_removals({"stage": "seeds"})
+
+    def _reset_removals(self, summary: dict) -> None:
+        self.store.table("frontier_removed").commit(
+            self.spark.createDataFrame([], "url string, round int"),
+            "replace", summary, coalesce=1,
+        )
 
     def _read_frontier(self) -> DataFrame:
-        """Current frontier view: the base/adds minus the removal log
-        (log mode), or just the latest replace snapshot. A removal at
-        round R covers rows discovered at rounds <= R only — a url
-        re-discovered AFTER (or in the same round as) its removal is
-        back in the frontier, matching replace-mode's
-        remove-then-union-adds ordering."""
+        """Current frontier view: the base/adds minus the removal log. A
+        removal at round R covers rows discovered at rounds <= R only — a
+        url re-discovered AFTER (or in the same round as) its removal is
+        back in the frontier (remove-then-add ordering)."""
         fr = self.store.table("frontier").read()
-        if self.frontier_mode == "log":
-            rem_t = self.store.table("frontier_removed")
-            if not rem_t.is_empty():
-                rem = rem_t.read().select(
-                    F.col("url").alias("_rm_url"),
-                    F.col("round").alias("_rm_round"),
-                )
-                fr = fr.join(
-                    rem,
-                    (fr["url"] == rem["_rm_url"])
-                    & (rem["_rm_round"] >= fr["round"]),
-                    "left_anti",
-                )
+        rem_t = self.store.table("frontier_removed")
+        if not rem_t.is_empty():
+            rem = rem_t.read().select(
+                F.col("url").alias("_rm_url"),
+                F.col("round").alias("_rm_round"),
+            )
+            fr = fr.join(
+                rem,
+                (fr["url"] == rem["_rm_url"])
+                & (rem["_rm_round"] >= fr["round"]),
+                "left_anti",
+            )
         return fr
 
     # -- one crawl round ----------------------------------------------------
     def run_round(self) -> RoundInfo | None:
-        import os as _os
+        """One round as named phases over one :class:`_Round`: select,
+        fetch-extract (analyses commit), expand (dedup), tail (the
+        overlapped commits), record (metrics + round_state) and
+        maintain. ``None`` once the budget or the frontier is spent."""
+        st = self._select()
+        if st is None:
+            return None
+        self._fetch_extract(st)
+        self._expand(st)
+        bloom_before_extend = self._bloom
+        self._tail(st)
+        info = self._record(st)
+        self._maintain(st)
+        for df in (st.sel_cached, st.fetched_slim, st.extracted, st.cand,
+                   st.new, st.flagged):
+            if df is not None:
+                df.unpersist()
+        if (bloom_before_extend is not None
+                and bloom_before_extend is not self._bloom):
+            # every job that referenced the superseded bloom's flag UDF
+            # (split_by_flag, commits over `new`, add_df, collect_debug)
+            # has completed by here — drop its executor-resident
+            # broadcast eagerly instead of waiting for GC
+            bloom_before_extend.release()
+        return info
 
-        _prof = _os.environ.get("VYNTR_CRAWL_PROFILE") == "1"
-        _pt = [time.monotonic()]
-
-        def _mark(label: str) -> None:
-            if _prof:
-                now = time.monotonic()
-                print(f"    [prof] {label}: {now - _pt[0]:.3f}s", flush=True)
-                _pt[0] = now
-
-        from pyspark.sql import Observation
-
+    def _select(self) -> _Round | None:
+        """Politeness select (C6) and budget truncation (C9)."""
         t0 = time.monotonic()
         rnd, pages_count = self._round_state()
         remaining = self.max_pages - pages_count
         if remaining <= 0:
             return None
-        use_bloom_now = self._bloom_active()
+        use_bloom = self._bloom_active()
         frontier = self._read_frontier()
-
         if self._frontier_size is None:
             # fresh resume: one count re-establishes the tracked size
             self._frontier_size = frontier.count()
         if self._frontier_size == 0:
             return None
-        fsize = self._frontier_size
+        st = _Round(rnd, pages_count, self._frontier_size, use_bloom, t0)
         # invalidate for the duration of the round: if anything below
         # raises, a retry on this engine instance must re-count rather
-        # than make budget/empty decisions on a stale size (restored from
-        # fsize on successful completion)
+        # than make budget/empty decisions on a stale size (restored by
+        # _record on successful completion)
         self._frontier_size = None
 
         host_caps = None
@@ -481,35 +511,59 @@ class CrawlEngine:
             trunc_order = order_cols
         sel = politeness_select(frontier, self.cap, self.salt_buckets,
                                 host_caps=host_caps, order_cols=order_cols)
-        obs_sel: Observation | None = None
-        sel_cached = None  # the persisted frame when sel is later re-projected
-        if fsize > remaining:
+        if st.fsize > remaining:
             # budget MIGHT bind (C9): pay the count job; truncate in
             # pinned (round, url) order — (priority desc, round, url) in
             # priority mode, where the budget cut IS the priority queue
             sel = sel.persist()
-            n_sel = sel.count()
-            _mark('politeness_select+count')
-            if n_sel > remaining:
+            st.n_sel = sel.count()
+            if st.n_sel > remaining:
                 sel2 = sel.orderBy(*trunc_order).limit(remaining).persist()
                 sel.unpersist()
                 sel = sel2
-                n_sel = remaining
+                st.n_sel = remaining
         else:
             # budget cannot bind (n_sel ≤ frontier_size ≤ remaining): skip
             # the up-front count job — n_sel rides the analyses-commit job
             # as an Observation (politeness guarantees ≥1 row per host, so
             # fsize > 0 implies a non-empty selection)
-            obs_sel = Observation()
-            sel = sel.observe(obs_sel, F.count(F.lit(1)).alias("n")).persist()
-            n_sel = -1  # resolved after the commit job fires the observation
-        if self.priority_frontier:
-            # downstream consumers see the reference frontier schema; the
-            # persisted frame keeps the priority column (cleanup below
-            # unpersists sel_cached, not the projection)
-            sel_cached = sel
-            sel = sel.drop("priority")
+            st.obs_sel = Observation()
+            sel = sel.observe(st.obs_sel,
+                              F.count(F.lit(1)).alias("n")).persist()
+        # downstream consumers see the reference frontier schema; the
+        # persisted frame keeps the priority column (the round unpersists
+        # sel_cached, not the projection)
+        st.sel_cached = sel
+        st.sel = sel.drop("priority") if self.priority_frontier else sel
+        return st
 
+    def _with_robots(self, df: DataFrame) -> DataFrame:
+        """Robots gating (north rule; permissive default = no-op): path =
+        '/' + everything after the first '/' of the authority+path part,
+        query stripped (gates.url_path parity, native exprs)."""
+        after_scheme = F.element_at(F.split(F.col("url"), "://", 2), 2)
+        no_query = F.split(after_scheme, "\\?", 2)[0]
+        path = F.when(
+            F.instr(no_query, "/") > 0,
+            F.concat(F.lit("/"), F.element_at(F.split(no_query, "/", 2), 2)),
+        ).otherwise(F.lit("/"))
+        df = df.withColumn("_path", path)
+        if self.robots is None:
+            return df.withColumn("_robots", F.lit(False))
+        return df.join(F.broadcast(self.robots), "host", "left").withColumn(
+            "_robots",
+            F.coalesce(
+                F.exists(
+                    "disallow_prefixes",
+                    lambda p: F.col("_path").startswith(p),
+                ),
+                F.lit(False),
+            ),
+        ).drop("disallow_prefixes")
+
+    def _fetch_extract(self, st: _Round) -> None:
+        """Fetch (C10), gates (C11/C12), extraction (C15) and the
+        analyses commit (C19): the round's one payload-heavy job."""
         # -- fetch: stream the big pages table through ONE BroadcastHashJoin
         # (BuildRight on the small batch). The 100-TB side is never
         # shuffled or sorted, and extraction parallelism = scan splits.
@@ -523,33 +577,8 @@ class CrawlEngine:
         fetch_cols = self.pages.select(
             "url", "html", "content_type", "status", "body_marker"
         )
-        fetched = fetch_cols.join(F.broadcast(sel), "url", "inner")
-
-        # robots gating (north rule; permissive default = no-op).
-        # path = '/' + everything after the first '/' of the authority+path
-        # part, query stripped (gates.url_path parity, native exprs).
-        after_scheme = F.element_at(F.split(F.col("url"), "://", 2), 2)
-        no_query = F.split(after_scheme, "\\?", 2)[0]
-        path = F.when(
-            F.instr(no_query, "/") > 0,
-            F.concat(F.lit("/"), F.element_at(F.split(no_query, "/", 2), 2)),
-        ).otherwise(F.lit("/"))
-        def add_robots(df: DataFrame) -> DataFrame:
-            df = df.withColumn("_path", path)
-            if self.robots is None:
-                return df.withColumn("_robots", F.lit(False))
-            return df.join(F.broadcast(self.robots), "host", "left").withColumn(
-                "_robots",
-                F.coalesce(
-                    F.exists(
-                        "disallow_prefixes",
-                        lambda p: F.col("_path").startswith(p),
-                    ),
-                    F.lit(False),
-                ),
-            ).drop("disallow_prefixes")
-
-        fetched = add_robots(fetched)
+        fetched = self._with_robots(
+            fetch_cols.join(F.broadcast(st.sel), "url", "inner"))
 
         # -- gate classification (C11/C12) as native exprs -------------------
         ct = F.trim(F.split(F.coalesce("content_type", F.lit("text/html")), ";")[0])
@@ -574,37 +603,37 @@ class CrawlEngine:
         fetched = fetched.withColumn("outcome", outcome)
         # persist only the SLIM columns (outcome lineage): caching the html
         # payloads would force a multi-GB in-memory materialization per
-        # round (GC churn); the metrics pass below re-runs the scan+join
+        # round (GC churn); the metrics pass re-runs the scan+join
         # instead, which parquet column-pruning makes nearly free (it never
         # reads the html column)
-        fetched_slim = fetched.select("url", "host", "round", "outcome").persist()
+        st.fetched_slim = fetched.select("url", "host", "round", "outcome").persist()
 
         # batch urls absent from pages ("missing" fetches): reconstructed
         # via broadcast anti-join of two batch-sized inputs (robots still
         # precedes the fetch attempt, matching the gate order above)
-        missing = sel.join(F.broadcast(fetched_slim.select("url")), "url", "left_anti")
-        missing = add_robots(missing).withColumn(
+        missing = st.sel.join(F.broadcast(st.fetched_slim.select("url")),
+                              "url", "left_anti")
+        missing = self._with_robots(missing).withColumn(
             "outcome",
             F.when(F.col("_robots"), F.lit("robots_blocked"))
             .otherwise(F.lit("missing")),
         )
-        outcome_rows = fetched_slim.select("url", "outcome").unionByName(
+        st.outcome_rows = st.fetched_slim.select("url", "outcome").unionByName(
             missing.select("url", "outcome")
         )
-        outcome_hosts = fetched_slim.select("host", "outcome").unionByName(
+        st.outcome_hosts = st.fetched_slim.select("host", "outcome").unionByName(
             missing.select("host", "outcome")
         )
 
         # -- extraction (C15) on successes only ------------------------------
         succ = fetched.filter(F.col("outcome") == "success")
-        extracted = succ.select(
+        st.extracted = succ.select(
             "url",
             F.col("round").alias("_disc_round"),
             extract_udf(F.col("html"), F.col("url")).alias("ex"),
         ).persist()
 
-        part = F.substring(F.md5(F.encode(F.col("url"), "utf-8")), 1, 2)
-        analyses = extracted.select(
+        analyses = st.extracted.select(
             sanitize_col(F.col("url")).alias("url"),
             sanitize_col(F.col("ex.language")).alias("language"),
             sanitize_col(F.col("ex.title")).alias("title"),
@@ -617,8 +646,8 @@ class CrawlEngine:
             ).alias("meta_tags"),
             sanitize_col(F.col("ex.canonical_url")).alias("canonical_url"),
             sanitize_col(F.col("ex.content_text")).alias("content_text"),
-            F.lit(rnd).alias("round"),
-            part.alias("src_partition"),
+            F.lit(st.rnd).alias("round"),
+            _md5_partition().alias("src_partition"),
         )
         # payload-heavy commit: coalesce (no Exchange) at ≥ core-count
         # width — extraction parallelism stays = cores, and the extracted
@@ -630,207 +659,169 @@ class CrawlEngine:
         if n_out is not None:
             n_out = max(n_out, self.spark.sparkContext.defaultParallelism)
         self.store.table("analyses").commit(
-            analyses, "append", {"round": rnd}, coalesce=n_out, shuffle=False,
+            analyses, "append", {"round": st.rnd}, coalesce=n_out,
+            shuffle=False,
         )
-        if obs_sel is not None:
+        if st.obs_sel is not None:
             # the commit job materialized sel (broadcast build), firing the
             # observation exactly once before the cache takes over
-            n_sel = _obs_count(obs_sel, sel)
-        _mark('fetch+extract+analyses_commit')
+            st.n_sel = _obs_count(st.obs_sel, st.sel)
 
-        # -- expansion (C17 explode → C4 seen anti-join) ----------------------
-        # candidate/new counts ride the frontier-commit job as Observations
-        # (zero extra Spark jobs; the metrics are exact because the commit
-        # materializes both plans exactly once through the persisted DFs)
-        links = extracted.select(F.explode("ex.links").alias("url"))
+    def _expand(self, st: _Round) -> None:
+        """Expansion (C17 explode → C4 seen dedup). Candidate/new counts
+        ride the tail's frontier-commit job as Observations (zero extra
+        Spark jobs; the metrics are exact because the commit materializes
+        both plans exactly once through the persisted DFs)."""
+        links = st.extracted.select(F.explode("ex.links").alias("url"))
         links = links.withColumn("host", F.lower(F.parse_url("url", F.lit("HOST"))))
         links = links.filter(F.col("host").isNotNull() & (F.col("host") != ""))
-        obs_cand = Observation()
-        cand = (
+        st.cand = (
             links.select("url", "host").distinct()
-            .observe(obs_cand, F.count(F.lit(1)).alias("n"))
+            .observe(st.obs_cand, F.count(F.lit(1)).alias("n"))
             .persist()
         )
-        new, flagged = self._dedup(cand, use_bloom_now)
-        obs_new = Observation()
-        new = new.observe(obs_new, F.count(F.lit(1)).alias("n")).persist()
+        new, st.flagged = self._dedup(st.cand, st.use_bloom)
+        st.new = new.observe(st.obs_new, F.count(F.lit(1)).alias("n")).persist()
 
-        new_frontier_rows = new.select(
-            "url", "host",
-            F.lit(rnd + 1).alias("depth"),
-            F.lit(rnd + 1).alias("round"),
+    def _tail(self, st: _Round) -> None:
+        """The round's independent tail jobs, submitted together: they
+        share only the persisted sel/fetched_slim/cand/new frames, so
+        overlapping them removes the constant serial tail that otherwise
+        caps scaling — at 4N cores the extract stage shrinks but 3-6 x
+        ~1 s of back-to-back small jobs would not."""
+        from concurrent.futures import ThreadPoolExecutor
+
+        jobs = {"frontier": self._commit_frontier, "seen": self._commit_seen,
+                "metrics": self._metrics_rows}
+        if st.use_bloom:
+            jobs["bloom"] = self._extend_bloom
+        if self.adaptive_rate:
+            jobs["host_stats"] = self._commit_host_stats
+        if self.priority_frontier:
+            jobs["host_edges"] = self._commit_host_edges
+        with ThreadPoolExecutor(max_workers=len(jobs)) as pool:
+            futs = {name: pool.submit(fn, st) for name, fn in jobs.items()}
+            out = {name: fut.result() for name, fut in futs.items()}
+        st.part_rows = out["metrics"]
+        if st.use_bloom:
+            self._bloom = out["bloom"]
+
+    def _commit_frontier(self, st: _Round) -> None:
+        # O(round delta): append the discovered rows; log the fetched
+        # urls as removals (Iceberg MERGE/positional-delete analog — no
+        # O(frontier) rewrite)
+        self.store.table("frontier").commit(
+            st.new.select("url", "host", F.lit(st.rnd + 1).alias("depth"),
+                          F.lit(st.rnd + 1).alias("round")),
+            "append", {"round": st.rnd}, coalesce=self.io_coalesce,
+        )
+        self.store.table("frontier_removed").commit(
+            st.sel.select("url", F.lit(st.rnd).alias("round")),
+            "append", {"round": st.rnd}, coalesce=self.io_coalesce,
         )
 
-        def _commit_frontier() -> None:
-            if self.frontier_mode == "log":
-                # O(round delta): append the discovered rows; log the
-                # fetched urls as removals (Iceberg MERGE/positional-
-                # delete analog — no O(frontier) rewrite)
-                self.store.table("frontier").commit(
-                    new_frontier_rows, "append", {"round": rnd},
-                    coalesce=self.io_coalesce,
-                )
-                self.store.table("frontier_removed").commit(
-                    sel.select("url", F.lit(rnd).alias("round")),
-                    "append", {"round": rnd},
-                    coalesce=self.io_coalesce,
-                )
-            else:
-                remaining = frontier.join(
-                    sel.select("url"), "url", "left_anti"
-                )
-                self.store.table("frontier").commit(
-                    remaining.unionByName(new_frontier_rows), "replace",
-                    {"round": rnd}, coalesce=self.io_coalesce,
-                )
+    def _commit_seen(self, st: _Round) -> None:
+        self.store.table("seen").commit(
+            st.new.select(F.hash("url").alias("url_hash"), "url"),
+            "append", {"round": st.rnd}, coalesce=self.io_coalesce,
+        )
 
-        def _commit_seen() -> None:
-            self.store.table("seen").commit(
-                new.select(F.hash("url").alias("url_hash"), "url"),
-                "append",
-                {"round": rnd},
-                coalesce=self.io_coalesce,
+    def _metrics_rows(self, st: _Round) -> list:
+        """Metrics (C20) per md5-partition lineage: one aggregation job,
+        per-partition outcome counts collected to the driver (≤256 rows
+        at any scale); round totals derived by summation."""
+        return (
+            st.outcome_rows.groupBy(_md5_partition().alias("partition"))
+            .agg(
+                F.count("*").alias("total"),
+                F.sum((F.col("outcome") == "success").cast("long")).alias("success"),
+                F.sum((F.col("outcome").isin("failed", "missing")).cast("long")).alias("failed"),
+                F.sum((F.col("outcome") == "skipped_ct").cast("long")).alias("skipped_ct"),
+                F.sum((F.col("outcome") == "robots_blocked").cast("long")).alias("robots_blocked"),
             )
+            .collect()
+        )
 
-        # -- metrics (C20) per md5-partition lineage --------------------------
-        # one aggregation job: per-partition outcome counts collected to the
-        # driver (≤256 rows at any scale); round totals derived by summation
-        def _metrics_rows() -> list:
-            return (
-                outcome_rows.groupBy(part.alias("partition"))
-                .agg(
-                    F.count("*").alias("total"),
-                    F.sum((F.col("outcome") == "success").cast("long")).alias("success"),
-                    F.sum((F.col("outcome").isin("failed", "missing")).cast("long")).alias("failed"),
-                    F.sum((F.col("outcome") == "skipped_ct").cast("long")).alias("skipped_ct"),
-                    F.sum((F.col("outcome") == "robots_blocked").cast("long")).alias("robots_blocked"),
-                )
-                .collect()
+    def _extend_bloom(self, st: _Round):
+        # incremental: only this round's new URLs are inserted (never a
+        # rebuild); reads the persisted `new` frame, so overlapping it
+        # with the commits at worst duplicates one cache fill
+        return self._bloom.add_df(st.new.select("url"))
+
+    def _commit_host_stats(self, st: _Round) -> None:
+        # per-host aggregates feeding the NEXT round's AIMD caps
+        # (adaptive_caps_from_stats): one hash-agg over the cached slim
+        # outcome rows, host-dimension output. Only FETCH-HEALTH outcomes
+        # count as attempts: robots_blocked and skipped_ct are
+        # content/policy signals, not server-health ones — a host full of
+        # robots-disallowed or non-HTML URLs must not be throttled to
+        # cap 1 when no request ever failed
+        agg = (
+            st.outcome_hosts
+            .filter(~F.col("outcome").isin("robots_blocked", "skipped_ct"))
+            .groupBy("host")
+            .agg(
+                F.count(F.lit(1)).alias("attempts"),
+                F.sum((F.col("outcome") == "success").cast("long"))
+                .alias("successes"),
             )
+            .select("host", F.lit(st.rnd).alias("round"),
+                    "attempts", "successes")
+        )
+        self.store.table("host_stats").commit(
+            agg, "append", {"round": st.rnd}, coalesce=self.io_coalesce
+        )
 
-        def _commit_host_edges() -> None:
-            # distinct cross-host pairs from this round's extraction —
-            # |host-pair|-sized (map-side combine collapses the link
-            # explosion before the shuffle), appended for the NEXT
-            # round's authority aggregate
-            src_host = F.lower(F.parse_url(F.col("url"), F.lit("HOST")))
-            e = (
-                extracted.select(src_host.alias("src_host"),
-                                 F.explode("ex.links").alias("_l"))
-                .withColumn("dst_host",
-                            F.lower(F.parse_url(F.col("_l"), F.lit("HOST"))))
-                .filter(
-                    F.col("src_host").isNotNull()
-                    & F.col("dst_host").isNotNull()
-                    & (F.col("dst_host") != "")
-                    & (F.col("src_host") != F.col("dst_host"))
-                )
-                .select("src_host", "dst_host").distinct()
+    def _commit_host_edges(self, st: _Round) -> None:
+        # distinct cross-host pairs from this round's extraction —
+        # |host-pair|-sized (map-side combine collapses the link
+        # explosion before the shuffle), appended for the NEXT round's
+        # authority aggregate
+        src_host = F.lower(F.parse_url(F.col("url"), F.lit("HOST")))
+        e = (
+            st.extracted.select(src_host.alias("src_host"),
+                                F.explode("ex.links").alias("_l"))
+            .withColumn("dst_host",
+                        F.lower(F.parse_url(F.col("_l"), F.lit("HOST"))))
+            .filter(
+                F.col("src_host").isNotNull()
+                & F.col("dst_host").isNotNull()
+                & (F.col("dst_host") != "")
+                & (F.col("src_host") != F.col("dst_host"))
             )
-            self.store.table("host_edges").commit(
-                e, "append", {"round": rnd}, coalesce=self.io_coalesce
-            )
+            .select("src_host", "dst_host").distinct()
+        )
+        self.store.table("host_edges").commit(
+            e, "append", {"round": st.rnd}, coalesce=self.io_coalesce
+        )
 
-        bloom_before_extend = self._bloom
-
-        def _extend_bloom():
-            # incremental: only this round's new URLs are inserted (never
-            # a rebuild); reads the persisted `new` frame, so overlapping
-            # it with the commits at worst duplicates one cache fill
-            return self._bloom.add_df(new.select("url"))
-
-        def _commit_host_stats() -> None:
-            # per-host aggregates feeding the NEXT round's AIMD caps
-            # (adaptive_caps_from_stats): one hash-agg over the cached
-            # slim outcome rows, host-dimension output. Only FETCH-HEALTH
-            # outcomes count as attempts: robots_blocked and skipped_ct
-            # are content/policy signals, not server-health ones — a host
-            # full of robots-disallowed or non-HTML URLs must not be
-            # throttled to cap 1 when no request ever failed (round-3
-            # review)
-            agg = (
-                outcome_hosts
-                .filter(~F.col("outcome").isin("robots_blocked",
-                                               "skipped_ct"))
-                .groupBy("host")
-                .agg(
-                    F.count(F.lit(1)).alias("attempts"),
-                    F.sum((F.col("outcome") == "success").cast("long"))
-                    .alias("successes"),
-                )
-                .select("host", F.lit(rnd).alias("round"),
-                        "attempts", "successes")
-            )
-            self.store.table("host_stats").commit(
-                agg, "append", {"round": rnd}, coalesce=self.io_coalesce
-            )
-
-        if self.parallel_commits:
-            # the four jobs are independent (they share only the persisted
-            # sel/fetched_slim/cand/new DFs); overlapping them removes the
-            # constant per-round serial tail that otherwise caps scaling —
-            # at 4N cores the extract stage shrinks but 3-4 x ~1 s of
-            # back-to-back small jobs would not
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=6) as pool:
-                fut_f = pool.submit(_commit_frontier)
-                fut_s = pool.submit(_commit_seen)
-                fut_m = pool.submit(_metrics_rows)
-                fut_b = (pool.submit(_extend_bloom)
-                         if use_bloom_now else None)
-                fut_h = (pool.submit(_commit_host_stats)
-                         if self.adaptive_rate else None)
-                fut_e = (pool.submit(_commit_host_edges)
-                         if self.priority_frontier else None)
-                fut_f.result()
-                fut_s.result()
-                part_rows = fut_m.result()
-                if fut_b is not None:
-                    self._bloom = fut_b.result()
-                if fut_h is not None:
-                    fut_h.result()
-                if fut_e is not None:
-                    fut_e.result()
-            _mark('frontier+seen+metrics+bloom (overlapped)')
-        else:
-            _commit_frontier()
-            _mark('frontier_commit+expansion')
-            _commit_seen()
-            _mark('seen_commit')
-            part_rows = _metrics_rows()
-            _mark('metrics_agg_collect')
-            if use_bloom_now:
-                self._bloom = _extend_bloom()
-                _mark('bloom_extend')
-            if self.adaptive_rate:
-                _commit_host_stats()
-                _mark('host_stats_commit')
-            if self.priority_frontier:
-                _commit_host_edges()
-                _mark('host_edges_commit')
-        n_cand = _obs_count(obs_cand, cand)
+    def _record(self, st: _Round) -> RoundInfo:
+        """Metrics and round_state: round_state, committed last, is the
+        round's durability barrier (resume reads only it)."""
+        rnd = st.rnd
+        n_cand = _obs_count(st.obs_cand, st.cand)
         self._last_n_cand = n_cand
-        n_new = _obs_count(obs_new, new)
+        n_new = _obs_count(st.obs_new, st.new)
         if self._seen_rows is not None:
             # auto mode's incremental seen-size tracker (no count job)
             self._seen_rows += n_new
-        if use_bloom_now:
+        if st.use_bloom:
             # watermark advances to the seen snapshot that carries exactly
-            # the rows just inserted (committed above)
+            # the rows just inserted (committed by the tail)
             self._bloom_wm = self.store.table("seen").current_snapshot_id()
-        n_succ = sum(r["success"] for r in part_rows)
-        wall_ms = int((time.monotonic() - t0) * 1000)
+        rows = st.part_rows
+        n_succ = sum(r["success"] for r in rows)
+        wall_ms = int((time.monotonic() - st.t0) * 1000)
         metric_tuples = [
             (rnd, r["partition"], r["total"], r["success"], r["failed"],
              r["skipped_ct"], r["robots_blocked"], 0, 0, 0)
-            for r in part_rows
+            for r in rows
         ]
         metric_tuples.append((
-            rnd, "__round__", n_sel, n_succ,
-            sum(r["failed"] for r in part_rows),
-            sum(r["skipped_ct"] for r in part_rows),
-            sum(r["robots_blocked"] for r in part_rows),
+            rnd, "__round__", st.n_sel, n_succ,
+            sum(r["failed"] for r in rows),
+            sum(r["skipped_ct"] for r in rows),
+            sum(r["robots_blocked"] for r in rows),
             n_cand - n_new, n_new, wall_ms,
         ))
         # tiny control tables: driver-side pyarrow commits (no Spark jobs)
@@ -838,64 +829,69 @@ class CrawlEngine:
             metric_tuples, "append", {"round": rnd}
         )
         self.store.table("round_state").commit_rows(
-            [(rnd, pages_count + n_sel, rnd, self.seed)],
+            [(rnd, st.pages_count + st.n_sel, rnd, self.seed)],
             "replace", {"round": rnd},
         )
-        self._state_cache = (rnd + 1, pages_count + n_sel)
-        self._frontier_size = fsize - n_sel + n_new
-        _mark('metrics+state_commit')
+        self._state_cache = (rnd + 1, st.pages_count + st.n_sel)
+        self._frontier_size = st.fsize - st.n_sel + n_new
 
-        if self.frontier_mode == "log" and (rnd + 1) % self.compact_every == 0:
-            # periodic compaction (Iceberg maintenance analog): fold the
-            # delta log into a fresh base so the removal anti-join and
-            # snapshot-path fan-in stay bounded. Idempotent under crash:
-            # replaying a removal against an already-compacted base is a
-            # no-op anti-join.
-            view = self._read_frontier()
-            self.store.table("frontier").commit(
-                view, "replace", {"compact_round": rnd},
-                coalesce=self.io_coalesce,
+        info = RoundInfo(
+            round=rnd, selected=st.n_sel, success=n_succ, new_urls=n_new,
+            dedup_dropped=n_cand - n_new, wall_ms=wall_ms,
+        )
+        if self.logger is not None:
+            # main.rs per-batch summary shape: totals + rate
+            self.logger.add_entry(
+                f"round {rnd}: selected={st.n_sel} success={n_succ} "
+                f"new_urls={n_new} dedup_dropped={n_cand - n_new} "
+                f"wall_ms={wall_ms} "
+                f"pages_per_sec={st.n_sel / max(wall_ms, 1) * 1000:.1f}"
             )
-            self.store.table("frontier_removed").commit(
-                self.spark.createDataFrame([], "url string, round int"),
-                "replace", {"compact_round": rnd}, coalesce=1,
-            )
-            if self.expire_keep is not None:
-                # drop the data files of pre-compaction delta snapshots
-                # (disk would otherwise grow O(rounds x delta) forever);
-                # manifest ids survive for lineage
-                self.store.table("frontier").expire_snapshots(
-                    keep_last=self.expire_keep
-                )
-                self.store.table("frontier_removed").expire_snapshots(
-                    keep_last=self.expire_keep
-                )
-            _mark('frontier_compaction')
+        if self.collect_debug:
+            from .operators.politeness import batch_shuffle_key
 
-        if self.expire_keep is not None and (rnd + 1) % self.compact_every == 0:
-            # same maintenance cadence for the tables that replace-commit
-            # every round OUTSIDE log mode: replace-mode frontier rewrites
-            # the full frontier per round and round_state rewrites one row
-            # per round in both modes — without expiry their old snapshot
-            # dirs accumulate O(rounds) (O(rounds x frontier) disk for
-            # replace mode, the exact growth expire_keep exists to bound).
-            if self.frontier_mode != "log":
-                self.store.table("frontier").expire_snapshots(
-                    keep_last=self.expire_keep
+            ordered = (
+                st.outcome_rows.select(
+                    "url", "outcome",
+                    batch_shuffle_key(self.seed, rnd).alias("_k"),
                 )
-            self.store.table("round_state").expire_snapshots(
-                keep_last=self.expire_keep
+                .orderBy("_k")
+                .collect()
             )
-            _mark('snapshot_expiry')
+            info.selected_urls = [r["url"] for r in ordered]
+            info.outcomes = {r["url"]: r["outcome"] for r in ordered}
+            info.new_url_list = [r["url"] for r in st.new.orderBy("url").collect()]
+        return info
 
-        if self.priority_frontier and (rnd + 1) % self.compact_every == 0:
+    def _maintain(self, st: _Round) -> None:
+        """Maintenance every ``compact_every`` rounds (Iceberg maintenance
+        analog), in this order: frontier compaction, snapshot expiry,
+        the host_edges fold, the bloom checkpoint."""
+        rnd = st.rnd
+        if (rnd + 1) % self.compact_every:
+            return
+        # fold the delta log into a fresh base so the removal anti-join
+        # and snapshot-path fan-in stay bounded. Idempotent under crash:
+        # replaying a removal against an already-compacted base is a
+        # no-op anti-join.
+        frontier_t = self.store.table("frontier")
+        frontier_t.commit(self._read_frontier(), "replace",
+                          {"compact_round": rnd}, coalesce=self.io_coalesce)
+        self._reset_removals({"compact_round": rnd})
+        if self.expire_keep is not None:
+            # drop the data files of pre-compaction delta snapshots and of
+            # the one-row round_state replaces (disk would otherwise grow
+            # O(rounds)); manifest ids survive for lineage
+            for name in ("frontier", "frontier_removed", "round_state"):
+                self.store.table(name).expire_snapshots(
+                    keep_last=self.expire_keep)
+        if self.priority_frontier:
             # host_edges is append-only and every round re-appends pairs
             # already recorded in earlier rounds, so the table grows
             # O(rounds x pairs/round) while its information content is
-            # the DISTINCT pair set; fold it on the maintenance cadence
-            # so the per-round authority aggregate scans |distinct pairs|,
-            # not the whole history. Idempotent under crash (a replay
-            # re-distincts to the same set).
+            # the DISTINCT pair set; fold it so the per-round authority
+            # aggregate scans |distinct pairs|, not the whole history.
+            # Idempotent under crash (a replay re-distincts to the same set).
             he_t = self.store.table("host_edges")
             if not he_t.is_empty():
                 he_t.commit(
@@ -905,55 +901,10 @@ class CrawlEngine:
                 )
                 if self.expire_keep is not None:
                     he_t.expire_snapshots(keep_last=self.expire_keep)
-            _mark('host_edges_compaction')
-
-        if use_bloom_now and (rnd + 1) % self.compact_every == 0:
-            # checkpoint the shards on the same maintenance cadence as
-            # compaction/expiry: resume then catches up from the watermark
-            # instead of rebuilding from the full seen table
+        if st.use_bloom:
+            # checkpoint the shards: resume then catches up from the
+            # watermark instead of rebuilding from the full seen table
             self._bloom.save(self._bloom_ckpt_path(), self._bloom_wm)
-            _mark('bloom_checkpoint')
-
-        info = RoundInfo(
-            round=rnd, selected=n_sel, success=n_succ, new_urls=n_new,
-            dedup_dropped=n_cand - n_new, wall_ms=wall_ms,
-        )
-        if self.logger is not None:
-            # main.rs per-batch summary shape: totals + rate
-            self.logger.add_entry(
-                f"round {rnd}: selected={n_sel} success={n_succ} "
-                f"new_urls={n_new} dedup_dropped={n_cand - n_new} "
-                f"wall_ms={wall_ms} "
-                f"pages_per_sec={n_sel / max(wall_ms, 1) * 1000:.1f}"
-            )
-        if self.collect_debug:
-            from .operators.politeness import batch_shuffle_key
-
-            ordered = (
-                outcome_rows.select(
-                    "url", "outcome",
-                    batch_shuffle_key(self.seed, rnd).alias("_k"),
-                )
-                .orderBy("_k")
-                .collect()
-            )
-            info.selected_urls = [r["url"] for r in ordered]
-            info.outcomes = {r["url"]: r["outcome"] for r in ordered}
-            info.new_url_list = [r["url"] for r in new.orderBy("url").collect()]
-
-        for df in (sel_cached if sel_cached is not None else sel,
-                   fetched_slim, extracted, cand, new):
-            df.unpersist()
-        if flagged is not None:
-            flagged.unpersist()
-        if (bloom_before_extend is not None
-                and bloom_before_extend is not self._bloom):
-            # every job that referenced the superseded bloom's flag UDF
-            # (split_by_flag, commits over `new`, add_df, collect_debug)
-            # has completed by here — drop its executor-resident
-            # broadcast eagerly instead of waiting for GC (round-3 review)
-            bloom_before_extend.release()
-        return info
 
     def run(self, max_rounds: int = 1_000) -> list[RoundInfo]:
         out = []

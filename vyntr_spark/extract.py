@@ -308,10 +308,9 @@ class _Extractor(HTMLParser):
 # enforced by the byte-identical golden fixtures plus the differential
 # battery in tests/test_extract.py (stdlib vs fast over synth pages,
 # adversarial strings and random HTML-ish fuzz); the stdlib path stays
-# selectable via VYNTR_EXTRACT_STDLIB=1 as the reference oracle.
+# callable as extract_html(..., _stdlib=True), the reference oracle.
 # ---------------------------------------------------------------------------
 
-import os as _os
 import re as _re
 
 # mirrors of the html.parser/_markupbase token regexes (3.11)
@@ -759,20 +758,16 @@ def _fast_extract(rawdata: str, base_url: str) -> ParsedHtml:
     )
 
 
-_USE_STDLIB = _os.environ.get("VYNTR_EXTRACT_STDLIB") == "1"
-
-
 def extract_html(html: str | bytes, base_url: str,
-                 _stdlib: bool | None = None) -> ParsedHtml:
+                 _stdlib: bool = False) -> ParsedHtml:
     """Parse one page. ``base_url`` must be an absolute URL.
 
     Default engine is the fast single-pass tokenizer above;
-    ``_stdlib=True`` (or env VYNTR_EXTRACT_STDLIB=1) runs the original
-    html.parser-based extractor — kept as the differential oracle the
-    parity tests compare against."""
+    ``_stdlib=True`` runs the original html.parser-based extractor —
+    kept as the differential oracle the parity tests compare against."""
     if isinstance(html, (bytes, bytearray)):
         html = bytes(html).decode("utf-8", errors="replace")
-    if _stdlib if _stdlib is not None else _USE_STDLIB:
+    if _stdlib:
         p = _Extractor(base_url)
         p.feed(html)
         p.close()

@@ -97,13 +97,35 @@ def iceberg_configs(catalog: str = "vyntr",
     return cfg
 
 
+def host_cpus() -> int:
+    """Cores for ``local[N]``: ``SPARK_GRAFT_CPUS``, else every core."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
+
+
+def size_bench_session() -> int:
+    """Size a benchmark script's local session to the host it runs on;
+    returns :func:`host_cpus`. The driver heap is fixed and pre-touched
+    (a fresh JVM growing its heap mid-round stalls on kernel
+    page-zeroing inside the timed region) at min(16 GiB, MemTotal / 4).
+    ``SPARK_DRIVER_MEM`` and ``VYNTR_DRIVER_JAVA_OPTS`` override."""
+    try:
+        mem = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, OSError, ValueError):
+        mem = 16 << 30
+    heap_mb = min(16 << 30, mem // 4) >> 20
+    os.environ.setdefault("SPARK_DRIVER_MEM", f"{heap_mb}m")
+    os.environ.setdefault("VYNTR_DRIVER_JAVA_OPTS",
+                          f"-Xms{heap_mb}m -XX:+AlwaysPreTouch")
+    return host_cpus()
+
+
 def get_spark(
     app_name: str = "vyntr-spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra: dict[str, str] | None = None,
 ) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = host_cpus()
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or cpus
     b = (
@@ -126,18 +148,10 @@ def get_spark(
         # mid-job; JVM case mapping is semantically identical for ASCII and
         # matches DuckDB's simple UTF-8 mapping (oracle parity).
         .config("spark.sql.icu.caseMappings.enabled", "false")
-        # JVM<->Python-worker channel: loopback TCP (Spark default) unless
-        # VYNTR_UDS=1 opts into AF_UNIX (Spark 4.1, SPARK-51596). The UDS
-        # route was tried as the round-2 default to cut kernel crossings
-        # on the Arrow exchange, but an interleaved local[32] A/B on this
-        # shared host was inconclusive (UDS 288/233 s vs TCP 96/227 s on
-        # identical 120k-page crawls — host-window noise dominates either
-        # channel), and every sub-100 s window ever observed here was TCP;
-        # defaulting to the channel with the best observed ceiling.
-        .config(
-            "spark.python.unix.domain.socket.enabled",
-            "true" if os.environ.get("VYNTR_UDS") == "1" else "false",
-        )
+        # JVM<->Python-worker channel pinned to loopback TCP: Spark 4.1's
+        # default follows the PYSPARK_UDS_MODE env var, and an AF_UNIX
+        # (SPARK-51596) A/B on 120k-page crawls showed no gain over TCP.
+        .config("spark.python.unix.domain.socket.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )
@@ -151,14 +165,6 @@ def get_spark(
     scratch = local_scratch_dir()
     if scratch and master.startswith("local"):
         b = b.config("spark.local.dir", scratch)
-    if os.environ.get("VYNTR_EVENTLOG"):
-        # perf-debugging knob: write task-metric event logs
-        b = (
-            b.config("spark.eventLog.enabled", "true")
-            .config("spark.eventLog.dir", os.environ["VYNTR_EVENTLOG"])
-            .config("spark.eventLog.compress", "false")
-            .config("spark.eventLog.rolling.enabled", "false")
-        )
     for k, v in (extra or {}).items():
         b = b.config(k, v)
     spark = b.getOrCreate()

@@ -177,26 +177,14 @@ class SnapshotTable:
             json.dump({"snapshots": [vars(s) for s in snaps]}, f, indent=1)
         os.replace(tmp, self._manifest_path)  # atomic commit point
 
-    # -- public API ----------------------------------------------------------
-    def commit(self, df: DataFrame, mode: str = "append",
-               summary: dict[str, Any] | None = None,
-               coalesce: int | None = None, shuffle: bool = True) -> int:
+    def _commit_snapshot(self, mode: str, summary: dict[str, Any] | None,
+                         write) -> int:
+        """The one commit path: take the next snapshot id, let ``write``
+        fill its dir, then append the snapshot to the manifest."""
         snaps = self._load()
         sid = (snaps[-1].snapshot_id + 1) if snaps else 1
         path = os.path.join(self.dir, f"snap-{sid:08d}")
-        if coalesce is not None:
-            # bound the output file count (Iceberg would handle file sizing
-            # via its own write targets). shuffle=True (repartition) is the
-            # safe default: a bare coalesce() narrows the WHOLE upstream
-            # stage to the target, which collapses post-shuffle stages
-            # (e.g. a distinct feeding the frontier commit). shuffle=False
-            # is for payload-heavy map-only plans (the analyses commit:
-            # scan → broadcast join → extract UDF) where the caller keeps
-            # the target ≥ the core count — the write then rides the same
-            # stage with zero Exchange instead of shuffling the full
-            # extracted-text payload before every commit.
-            df = df.repartition(coalesce) if shuffle else df.coalesce(coalesce)
-        df.write.mode("overwrite").parquet(path)
+        write(path)
         snaps.append(
             Snapshot(
                 snapshot_id=sid,
@@ -209,6 +197,25 @@ class SnapshotTable:
         )
         self._save(snaps)
         return sid
+
+    # -- public API ----------------------------------------------------------
+    def commit(self, df: DataFrame, mode: str = "append",
+               summary: dict[str, Any] | None = None,
+               coalesce: int | None = None, shuffle: bool = True) -> int:
+        if coalesce is not None:
+            # bound the output file count (Iceberg would handle file sizing
+            # via its own write targets). shuffle=True (repartition) is the
+            # safe default: a bare coalesce() narrows the WHOLE upstream
+            # stage to the target, which collapses post-shuffle stages
+            # (e.g. a distinct feeding the frontier commit). shuffle=False
+            # is for payload-heavy map-only plans (the analyses commit:
+            # scan → broadcast join → extract UDF) where the caller keeps
+            # the target ≥ the core count — the write then rides the same
+            # stage with zero Exchange instead of shuffling the full
+            # extracted-text payload before every commit.
+            df = df.repartition(coalesce) if shuffle else df.coalesce(coalesce)
+        return self._commit_snapshot(
+            mode, summary, lambda path: df.write.mode("overwrite").parquet(path))
 
     def commit_rows(self, rows: list[tuple], mode: str = "append",
                     summary: dict[str, Any] | None = None) -> int:
@@ -237,23 +244,12 @@ class SnapshotTable:
              for (f, f_pa, c) in zip(self.schema.fields, arrow_schema, cols)},
             schema=arrow_schema,
         )
-        snaps = self._load()
-        sid = (snaps[-1].snapshot_id + 1) if snaps else 1
-        path = os.path.join(self.dir, f"snap-{sid:08d}")
-        os.makedirs(path, exist_ok=True)
-        pq.write_table(table, os.path.join(path, "part-00000.parquet"))
-        snaps.append(
-            Snapshot(
-                snapshot_id=sid,
-                parent_id=snaps[-1].snapshot_id if snaps else None,
-                mode=mode,
-                timestamp_ms=int(time.time() * 1000),
-                summary=summary or {},
-                path=path,
-            )
-        )
-        self._save(snaps)
-        return sid
+
+        def write(path: str) -> None:
+            os.makedirs(path, exist_ok=True)
+            pq.write_table(table, os.path.join(path, "part-00000.parquet"))
+
+        return self._commit_snapshot(mode, summary, write)
 
     def snapshots(self) -> list[Snapshot]:
         return self._load()
@@ -347,8 +343,8 @@ class SnapshotTable:
         """Iceberg ``expire_snapshots`` analog: delete the data files of
         snapshots that no current-or-recent read can reference, keeping
         time travel for the ``keep_last`` most recent snapshots. A long
-        crawl rewrites the frontier every round (replace mode), so without
-        expiration disk grows O(rounds × frontier); run this per-N-rounds
+        crawl appends frontier deltas every round and replaces round_state,
+        so without expiration disk grows O(rounds); run this per-N-rounds
         like an Iceberg maintenance job. Returns the number of snapshot
         dirs removed. Expired snapshots stay in the manifest (marked by a
         cleared path) so lineage/ids remain auditable."""
@@ -389,7 +385,7 @@ class SnapshotStore:
         "pages": PAGES,
         "seeds": SEEDS,
         "frontier": FRONTIER,
-        # removal log for frontier_mode='log': round = the round the url
+        # frontier removal log: round = the round the url
         # was SELECTED (removed); a removal covers frontier rows whose
         # discovery round is <= it, so a same-round re-discovery (the
         # normalize_seeds=False alias quirk) survives
