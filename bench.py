@@ -64,6 +64,62 @@ def pages_scale(sf: float) -> tuple[int, int]:
     return n_pages, n_hosts
 
 
+#: host CPU counters; hosts without procfs have no such file
+PROC_STAT = "/proc/stat"
+
+
+def _cpu_ticks() -> tuple[int, int, int] | None:
+    """(user+nice, system+irq+softirq, steal) jiffies from /proc/stat, or
+    None when the host has no readable /proc/stat."""
+    try:
+        with open(PROC_STAT) as f:
+            p = f.readline().split()
+    except OSError:
+        return None
+    return (int(p[1]) + int(p[2]),
+            int(p[3]) + int(p[6]) + int(p[7]),
+            int(p[8]))
+
+
+def host_busy_probe(sample_s: float = 1.0) -> dict | None:
+    """Busy and steal cores over ``sample_s`` with this process idle:
+    busy = sandbox background load + steal. None without /proc/stat."""
+    c0 = _cpu_ticks()
+    if c0 is None:
+        return None
+    time.sleep(sample_s)
+    c1 = _cpu_ticks()
+    if c1 is None:
+        return None
+    hz = os.sysconf("SC_CLK_TCK")
+    return {"busy_cores": round((c1[0] + c1[1] - c0[0] - c0[1]) / hz / sample_s, 1),
+            "steal_cores": round((c1[2] - c0[2]) / hz / sample_s, 1)}
+
+
+def clean_window(retries: int) -> dict:
+    """Probe the host window; while it reads degraded, wait 20 s and
+    re-probe, at most ``retries`` times, so the artifact lands in a clean
+    window when one exists. Every reading is recorded, so a still-degraded
+    run describes itself. Without /proc/stat the probe is recorded as
+    unavailable and there is no wait."""
+    probe = host_busy_probe()
+    if probe is None:
+        return {"window_probe": "unavailable", "window_clean_at_start": None}
+
+    def clean(p: dict) -> bool:
+        return p["busy_cores"] <= 4.0 and p["steal_cores"] <= 0.5
+
+    probes = [probe]
+    while retries > 0 and not clean(probes[-1]):
+        time.sleep(20)
+        probe = host_busy_probe()
+        if probe is None:
+            break
+        probes.append(probe)
+        retries -= 1
+    return {"window_probe": probes, "window_clean_at_start": clean(probes[-1])}
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     # same fixed, pre-touched heap as the scaling evidence
@@ -93,35 +149,9 @@ def main() -> None:
     # The r4 per-query artifact was recorded in a hypervisor-contended
     # window (steal_cores 1.0-1.4 in its own telemetry; 25+ unchanged
     # plans uniformly 1.3-1.7x slower) and couldn't anchor regressions.
-    # Before the timed region, sample /proc/stat for 1 s with this
-    # process idle: busy cores then = sandbox background load + steal.
-    # If the window reads degraded, wait and re-probe (bounded) so the
-    # artifact lands in a clean window when one exists; every probe
-    # reading is recorded so a still-degraded run is self-describing.
-    def host_busy_probe(sample_s: float = 1.0) -> dict:
-        def ticks():
-            with open("/proc/stat") as f:
-                p = f.readline().split()
-            busy = sum(int(x) for x in p[1:4]) + int(p[6]) + int(p[7])
-            return busy, int(p[8])
-        hz = os.sysconf("SC_CLK_TCK")
-        b0, s0 = ticks()
-        time.sleep(sample_s)
-        b1, s1 = ticks()
-        return {"busy_cores": round((b1 - b0) / hz / sample_s, 1),
-                "steal_cores": round((s1 - s0) / hz / sample_s, 1)}
-
-    probes = [host_busy_probe()]
-    waits = int(os.environ.get("BENCH_CLEAN_WINDOW_RETRIES", "4"))
-    while (waits > 0 and (probes[-1]["busy_cores"] > 4.0
-                          or probes[-1]["steal_cores"] > 0.5)):
-        time.sleep(20)
-        probes.append(host_busy_probe())
-        waits -= 1
-    extras["window_probe"] = probes
-    extras["window_clean_at_start"] = bool(
-        probes[-1]["busy_cores"] <= 4.0
-        and probes[-1]["steal_cores"] <= 0.5)
+    # Before the timed region, wait (bounded) for a clean window.
+    extras.update(clean_window(
+        int(os.environ.get("BENCH_CLEAN_WINDOW_RETRIES", "4"))))
 
     budget_s = float(os.environ.get("BENCH_BUDGET_S", "600"))
     t_bench0 = time.monotonic()
@@ -135,16 +165,6 @@ def main() -> None:
             extras["bench_budget_trimmed"] = True
         return hit
 
-    def _cpu_ticks() -> tuple[int, int, int]:
-        """(user+nice, system+irq+softirq, steal) jiffies from /proc/stat."""
-        with open("/proc/stat") as f:
-            p = f.readline().split()
-        return (int(p[1]) + int(p[2]),
-                int(p[3]) + int(p[6]) + int(p[7]),
-                int(p[8]))
-
-    _HZ = os.sysconf("SC_CLK_TCK")
-
     def host_sample(fn):
         """Run fn, returning (wall, result, host-cores dict). The host
         telemetry separates engine speed from the sandbox's contended
@@ -156,14 +176,17 @@ def main() -> None:
         out = fn()
         dt = time.monotonic() - t0
         c1 = _cpu_ticks()
+        if c0 is None or c1 is None:
+            return dt, out, None  # no /proc/stat on this host
+        hz = os.sysconf("SC_CLK_TCK")
         host = {
-            "user_cores": round((c1[0] - c0[0]) / _HZ / dt, 1),
-            "sys_cores": round((c1[1] - c0[1]) / _HZ / dt, 1),
-            "steal_cores": round((c1[2] - c0[2]) / _HZ / dt, 1),
+            "user_cores": round((c1[0] - c0[0]) / hz / dt, 1),
+            "sys_cores": round((c1[1] - c0[1]) / hz / dt, 1),
+            "steal_cores": round((c1[2] - c0[2]) / hz / dt, 1),
         }
         return dt, out, host
 
-    def contended(host: dict) -> bool:
+    def contended(host: dict | None) -> bool:
         """True when the sample's host window was eaten by the sandbox
         (hypervisor steal, or system time above useful user time). Two
         samples can agree within 25% simply because the SAME bad window
@@ -172,8 +195,9 @@ def main() -> None:
         same run) — so agreement only early-stops sampling when the best
         sample's window looks healthy; otherwise keep sampling while the
         budget allows and let min() pick the clean window."""
-        return (host["steal_cores"] >= 1.0
-                or host["sys_cores"] > max(2.0, host["user_cores"]))
+        return host is not None and (
+            host["steal_cores"] >= 1.0
+            or host["sys_cores"] > max(2.0, host["user_cores"]))
 
     def timed(name, fn):
         t0 = time.monotonic()

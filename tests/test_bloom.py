@@ -1,6 +1,8 @@
 """Bloom-shard prefilter safety: no false negatives, exact-equivalence of
 bloom_anti_join to the plain anti-join (SURVEY.md §5.4)."""
 
+import os
+
 from pyspark.sql import functions as F
 
 from vyntr_spark.operators.bloom import (
@@ -313,6 +315,56 @@ def test_confirm_survives_real_hash_collision(spark):
         assert got == [in_cand], (confirm, hash_col)
     got = [r["url"] for r in broadcast_anti_join(cand, seen).collect()]
     assert got == [in_cand]
+
+
+def test_seen_mixed_spark_and_arrow_snapshots(spark, tmp_path):
+    """A crawl's seen table holds Spark-written snapshots (F.hash int on
+    disk) and driver-written ones (the same F.hash collected as Arrow,
+    cast to long by commit_rows). Both read back as LongType with equal
+    hashes, and the int-keyed broadcast confirm finds seen rows in either
+    snapshot exactly like the plain anti-join."""
+    import pyarrow.parquet as pq
+    from pyspark.sql import types as T
+
+    from vyntr_spark.operators.bloom import split_by_flag
+    from vyntr_spark.tables import SnapshotStore
+
+    urls = [f"http://h{i % 5}.example/p{i}" for i in range(400)]
+    spark_half = spark.createDataFrame(
+        [(u,) for u in urls[:200]], "url string"
+    ).select(F.hash("url").alias("url_hash"), "url")
+    arrow_half = spark.createDataFrame(
+        [(u,) for u in urls[200:]], "url string"
+    ).select(F.hash("url").alias("url_hash"), "url").toArrow()
+    t = SnapshotStore(spark, str(tmp_path / "wh")).table("seen")
+    t.commit(spark_half, "append", {"round": 0}, coalesce=2)
+    t.commit_rows(arrow_half, "append", {"round": 1})
+    on_disk = [
+        pq.read_schema(os.path.join(s.path, f)).field("url_hash").type
+        for s in t.snapshots() for f in sorted(os.listdir(s.path))
+        if f.endswith(".parquet")
+    ]
+    assert {str(x) for x in on_disk} == {"int32", "int64"}
+
+    seen = t.read()
+    assert seen.schema["url_hash"].dataType == T.LongType()
+    got = {r["url"]: r["url_hash"] for r in seen.collect()}
+    want = {r["url"]: r["h"] for r in spark.createDataFrame(
+        [(u,) for u in urls], "url string"
+    ).select("url", F.hash("url").alias("h")).collect()}
+    assert got == want
+
+    cand = spark.createDataFrame(
+        [(f"http://h{i % 5}.example/p{i}",) for i in range(150, 450)],
+        "url string",
+    )
+    plain = {r["url"] for r in cand.join(seen, "url", "left_anti").collect()}
+    assert plain == {f"http://h{i % 5}.example/p{i}" for i in range(400, 450)}
+    flagged = cand.withColumn("_maybe", F.lit(True))
+    got = {r["url"] for r in split_by_flag(
+        flagged, seen, confirm="broadcast", seen_hash_col="url_hash"
+    ).collect()}
+    assert got == plain
 
 
 def test_release_drops_broadcast_then_rebuilds_on_demand(spark):

@@ -217,6 +217,109 @@ def test_parity_broadcast_flip_dedup(spark, tmp_path, tiny_web):
     _assert_parity(store, infos, orc, rows)
 
 
+_PA_MODE = {"priority_frontier": True, "adaptive_rate": True}
+
+
+@pytest.mark.parametrize("mode,cap", [
+    ({}, None), (_PA_MODE, None),
+    # every dedup on the shuffled anti-join: the tail does not depend on
+    # the dedup's plan
+    ({}, 0),
+], ids=["default", "priority_adaptive", "default-shuffled_dedup"])
+def test_parity_driver_tail(spark, tmp_path, tiny_web, monkeypatch, mode,
+                            cap):
+    """Kill-and-resume parity with the round's deltas committed from the
+    driver: `new` is collected once and appended to frontier and seen
+    with commit_rows, and frontier_removed comes from the collected
+    batch — no Spark write for any of the three, on any round."""
+    from vyntr_spark.operators import bloom
+    from vyntr_spark.tables import SnapshotTable
+
+    via = {}  # (table, round) -> "commit" | "commit_rows"
+    real_commit, real_rows = SnapshotTable.commit, SnapshotTable.commit_rows
+
+    def commit(tbl, df, mode="append", summary=None, **kw):
+        via[(tbl.name, (summary or {}).get("round"))] = "commit"
+        return real_commit(tbl, df, mode, summary, **kw)
+
+    def commit_rows(tbl, rows, mode="append", summary=None):
+        via[(tbl.name, (summary or {}).get("round"))] = "commit_rows"
+        return real_rows(tbl, rows, mode, summary)
+
+    monkeypatch.setattr(SnapshotTable, "commit", commit)
+    monkeypatch.setattr(SnapshotTable, "commit_rows", commit_rows)
+    if cap is not None:
+        monkeypatch.setattr(bloom, "BROADCAST_CONFIRM_MAX_ROWS", cap)
+    rows, seeds = tiny_web
+    orc = run_oracle(_pages_map(rows), seeds, max_pages=10_000, seed=7,
+                     priority=mode.get("priority_frontier", False),
+                     adaptive=mode.get("adaptive_rate", False))
+    store, infos = _run_engine(spark, tmp_path, rows, seeds, seed=7,
+                               stop_after=2, **mode)
+    _assert_parity(store, infos, orc, rows)
+
+    assert len(infos) >= 3
+    for i in infos:
+        for name in ("frontier", "seen", "frontier_removed"):
+            assert via[(name, i.round)] == "commit_rows", (name, i.round)
+
+
+def test_round_jobs_inherit_job_group(spark, tmp_path, tiny_web):
+    """Every Spark job a round submits, the tail's pool threads included,
+    runs in the caller's job group."""
+    from vyntr_spark.crawl import CrawlEngine
+
+    rows, seeds = tiny_web
+    eng = CrawlEngine(spark, SnapshotStore(spark, str(tmp_path / "wh")),
+                      _pages_df(spark, rows), seed=7, adaptive_rate=True,
+                      priority_frontier=True)
+    eng.init_from_seeds(seeds)
+    eng.run_round()  # round 1 below is a steady-state round
+    sc = spark.sparkContext
+    st = sc.statusTracker()
+
+    def marker(group):
+        sc.setJobGroup(group, group)
+        spark.range(1).collect()
+        return st.getJobIdsForGroup(group)
+
+    try:
+        first = max(marker(f"{tmp_path.name}-before")) + 1
+        sc.setJobGroup(f"{tmp_path.name}-round", "one crawl round")
+        assert eng.run_round() is not None
+        last = min(marker(f"{tmp_path.name}-after")) - 1
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    in_round = set(range(first, last + 1))
+    assert in_round, "the round ran no Spark job"
+    assert in_round <= set(st.getJobIdsForGroup(f"{tmp_path.name}-round"))
+
+
+def test_round_runs_with_pinned_threads_off(spark, tmp_path, tiny_web,
+                                           monkeypatch):
+    """With PYSPARK_PIN_THREAD=false, inheritable_thread_target returns
+    its argument unchanged (here: the session). The tail then submits its
+    functions as they are, and the rounds equal those of the default
+    pinned mode."""
+    from vyntr_spark import crawl
+
+    rows, seeds = tiny_web
+
+    def two_rounds(name):
+        eng = crawl.CrawlEngine(
+            spark, SnapshotStore(spark, str(tmp_path / name)),
+            _pages_df(spark, rows), seed=7, collect_debug=True)
+        eng.init_from_seeds(seeds)
+        return [eng.run_round() for _ in range(2)]
+
+    pinned = two_rounds("pinned")
+    monkeypatch.setattr(crawl, "inheritable_thread_target", lambda f: f)
+    unpinned = two_rounds("unpinned")
+    for a, b in zip(pinned, unpinned):
+        a.wall_ms = b.wall_ms = 0
+    assert unpinned == pinned
+
+
 def test_exact_dedup_never_shuffles_seen(spark, tmp_path, monkeypatch):
     """Plan pin for the default (non-bloom) dedup. A seen table within
     the planner's auto-broadcast threshold takes the plain anti-join,

@@ -98,3 +98,39 @@ def test_expire_keeps_window_replace_history(spark, tmp_path):
     assert t.expire_snapshots(keep_last=2) == 1
     assert {r["url"] for r in t.read(as_of=s2).collect()} == {"b"}
     assert {r["url"] for r in t.read().collect()} == {"b", "c"}
+
+
+def test_commit_rows_arrow_table_roundtrip(spark, tmp_path):
+    """commit_rows takes a pyarrow.Table as well as tuples: columns are
+    picked by name and cast to the table schema (an int32 F.hash becomes
+    the long url_hash), and the rows read back through read()."""
+    import pyarrow as pa
+
+    store = SnapshotStore(spark, str(tmp_path / "wh"))
+    cases = {
+        "frontier": pa.table({
+            # extra and reordered columns: commit_rows selects by name
+            "round": pa.array([1, 1], pa.int32()),
+            "host": ["a.example", "b.example"],
+            "url": ["http://a.example/", "http://b.example/x"],
+            "depth": pa.array([1, 2], pa.int32()),
+            "_robots": [False, True],
+        }),
+        "seen": pa.table({
+            "url_hash": pa.array([-7, 2**31 - 1], pa.int32()),
+            "url": ["http://a.example/", "http://b.example/x"],
+        }),
+        "frontier_removed": pa.table({
+            "url": ["http://a.example/"],
+            "round": pa.array([3], pa.int32()),
+        }),
+    }
+    for name, tbl in cases.items():
+        t = store.table(name)
+        sid = t.commit_rows(tbl, "append", {"round": 0})
+        assert t.snapshots()[-1].snapshot_id == sid
+        assert t.snapshots()[-1].summary == {"round": 0}
+        cols = t.schema.fieldNames()
+        got = sorted(tuple(r) for r in t.read().collect())
+        want = sorted(zip(*(tbl[c].to_pylist() for c in cols)))
+        assert got == want, name

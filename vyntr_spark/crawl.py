@@ -1,17 +1,18 @@
 """The crawl engine — iterative DataFrame rounds over snapshot tables.
 
 Rebuild of the reference crawl lifecycle (genesis/src/main.rs:64-318,
-traced in SURVEY.md §3.1) as one deterministic Spark job per round:
+traced in SURVEY.md §3.1) as one deterministic round of Spark jobs:
 
     round r:
       frontier ──politeness_select (C6: two-phase salted window)──► batch
-      batch ──budget truncation in (round,url) order (C9)──► selected
+      batch ──budget truncation in (round,url) order (C9), robots gate
+            ──► selected, collected to the driver as Arrow
       pages ⋉ broadcast(selected)  (C10 "fetch" = semi-join of the big
              pages table against the small batch; at 10^10 scale the
              pages side is partition-pruned by url-bucket)
-      native gate exprs (C11 content-type, C12 error class, robots)
+      native gate exprs (C11 content-type, C12 error class)
       extract_udf (C15, Arrow-vectorized)  ──► analyses snapshot (C19)
-      explode(links) (C17) ──► distinct ──► anti-join seen (C4)
+      explode(links) (C17) ──► distinct ──► anti-join seen (C4) ──► new
       ──► frontier(r+1) + seen append + metrics + round_state
 
 Every round commits snapshots with summary props; resume = read the last
@@ -36,6 +37,15 @@ Scale notes (10^10-URL frontier design):
     state object: select, fetch-extract, expand, tail (the independent
     commits, submitted together), record (metrics, then round_state
     last) and maintain.
+  * the round's deltas are driver work: the selected batch, the
+    outcome rows (metrics, host_stats) and the new urls are each
+    collected once and committed with SnapshotTable.commit_rows — a
+    distributed write of ~2k rows is scheduler overhead. Only the
+    payload-heavy analyses write and the host_edges append are Spark
+    writes. Driver memory bound: the batch (≤ cap per host, ≤ the
+    page budget) and the round's new urls (≤ its distinct outlinks,
+    i.e. batch × links per page) must fit in the Python driver; seen,
+    frontier and pages never leave the executors.
   * no global rank anywhere: ordering is the composite (round, url).
 """
 
@@ -43,15 +53,23 @@ from __future__ import annotations
 
 import os
 import time
+from collections import Counter
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
+import pyarrow as pa
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .canonicalize import try_domain, try_normalize
-from .gates import ALLOWED_CONTENT_TYPES
+from .gates import (
+    ALLOWED_CONTENT_TYPES, FAILED, MISSING, ROBOTS, SKIPPED_CT, SUCCESS,
+)
 from .operators.extract_udf import extract_udf, sanitize_col
-from .operators.politeness import MAX_PER_DOMAIN, politeness_select
+from .operators.politeness import (
+    MAX_PER_DOMAIN, batch_shuffle_key, politeness_select,
+)
 from .tables import FRONTIER, SnapshotStore
 
 
@@ -64,6 +82,16 @@ def _obs_count(obs, df: DataFrame) -> int:
         return int(obs.get["n"])
     except Exception:
         return df.count()
+
+
+def _in_caller_job_group(spark: SparkSession, fn):
+    """``fn`` wrapped to run with the calling thread's job group and
+    tags. Pool threads are separate JVM threads in pinned-thread mode
+    (PySpark's default), so they need the wrapper; with the mode off,
+    ``inheritable_thread_target`` hands back its argument (the session)
+    and ``fn`` runs as is."""
+    wrap = inheritable_thread_target(spark)
+    return fn if wrap is spark else wrap(fn)
 
 
 def _md5_partition():
@@ -93,20 +121,20 @@ class _Round:
     fsize: int  # tracked frontier size at the start of the round
     use_bloom: bool
     t0: float
-    n_sel: int = -1  # -1 until the analyses commit fires obs_sel
-    obs_sel: Observation | None = None
+    # the selected batch on the driver, with _robots, its lineage
+    # partition _part and, under collect_debug, its fetch order _order
+    batch: pa.Table
+    sel: DataFrame  # its local relation (the fetch join's build side)
     obs_cand: Observation = field(default_factory=Observation)
-    obs_new: Observation = field(default_factory=Observation)
-    sel: DataFrame | None = None  # the batch, reference frontier schema
-    sel_cached: DataFrame | None = None  # its persisted frame
     fetched_slim: DataFrame | None = None
-    outcome_rows: DataFrame | None = None
-    outcome_hosts: DataFrame | None = None
     extracted: DataFrame | None = None
     cand: DataFrame | None = None
     new: DataFrame | None = None
+    new_rows: pa.Table | None = None  # `new`, collected by the tail
     flagged: DataFrame | None = None
-    part_rows: list = field(default_factory=list)
+    # one dict per fetched or missing url: url, host, _part, outcome
+    # (and _order under collect_debug)
+    outcomes: list[dict] = field(default_factory=list)
 
 
 class CrawlEngine:
@@ -305,8 +333,8 @@ class CrawlEngine:
             return True
         return probe.count() <= BROADCAST_CONFIRM_MAX_ROWS
 
-    def _dedup(self, cand: DataFrame,
-               use_bloom: bool) -> tuple[DataFrame, DataFrame | None]:
+    def _dedup(self, cand: DataFrame, use_bloom: bool
+               ) -> tuple[DataFrame, DataFrame | None]:
         """The round's unseen candidates (C4): exactly
         ``cand.join(seen, "url", "left_anti")`` on every path, so the
         seen set never depends on the strategy. Returns ``(new,
@@ -444,21 +472,27 @@ class CrawlEngine:
         self._tail(st)
         info = self._record(st)
         self._maintain(st)
-        for df in (st.sel_cached, st.fetched_slim, st.extracted, st.cand,
-                   st.new, st.flagged):
+        for df in (st.extracted, st.cand, st.flagged):
             if df is not None:
                 df.unpersist()
         if (bloom_before_extend is not None
                 and bloom_before_extend is not self._bloom):
             # every job that referenced the superseded bloom's flag UDF
-            # (split_by_flag, commits over `new`, add_df, collect_debug)
-            # has completed by here — drop its executor-resident
-            # broadcast eagerly instead of waiting for GC
+            # (split_by_flag, the collect of `new`, add_df) has completed
+            # by here — drop its executor-resident broadcast eagerly
+            # instead of waiting for GC
             bloom_before_extend.release()
         return info
 
     def _select(self) -> _Round | None:
-        """Politeness select (C6) and budget truncation (C9)."""
+        """Politeness select (C6), budget truncation (C9) and the robots
+        gate, collected to the driver once as Arrow: the batch is what the
+        fetch join broadcasts anyway, so holding it locally adds no size
+        assumption, and it serves as the fetch join's build side, as
+        ``n_sel`` and as the round's ``frontier_removed`` rows. Spark
+        computes its lineage partition (the analyses' ``src_partition``
+        rule) and, under collect_debug, its C7 fetch-order key, so the
+        driver never re-implements either."""
         t0 = time.monotonic()
         rnd, pages_count = self._round_state()
         remaining = self.max_pages - pages_count
@@ -471,7 +505,7 @@ class CrawlEngine:
             self._frontier_size = frontier.count()
         if self._frontier_size == 0:
             return None
-        st = _Round(rnd, pages_count, self._frontier_size, use_bloom, t0)
+        fsize = self._frontier_size
         # invalidate for the duration of the round: if anything below
         # raises, a retry on this engine instance must re-count rather
         # than make budget/empty decisions on a stale size (restored by
@@ -511,31 +545,19 @@ class CrawlEngine:
             trunc_order = order_cols
         sel = politeness_select(frontier, self.cap, self.salt_buckets,
                                 host_caps=host_caps, order_cols=order_cols)
-        if st.fsize > remaining:
-            # budget MIGHT bind (C9): pay the count job; truncate in
-            # pinned (round, url) order — (priority desc, round, url) in
-            # priority mode, where the budget cut IS the priority queue
-            sel = sel.persist()
-            st.n_sel = sel.count()
-            if st.n_sel > remaining:
-                sel2 = sel.orderBy(*trunc_order).limit(remaining).persist()
-                sel.unpersist()
-                sel = sel2
-                st.n_sel = remaining
-        else:
-            # budget cannot bind (n_sel ≤ frontier_size ≤ remaining): skip
-            # the up-front count job — n_sel rides the analyses-commit job
-            # as an Observation (politeness guarantees ≥1 row per host, so
-            # fsize > 0 implies a non-empty selection)
-            st.obs_sel = Observation()
-            sel = sel.observe(st.obs_sel,
-                              F.count(F.lit(1)).alias("n")).persist()
-        # downstream consumers see the reference frontier schema; the
-        # persisted frame keeps the priority column (the round unpersists
-        # sel_cached, not the projection)
-        st.sel_cached = sel
-        st.sel = sel.drop("priority") if self.priority_frontier else sel
-        return st
+        if fsize > remaining:
+            # budget MIGHT bind (C9): truncate in pinned (round, url) order
+            # — (priority desc, round, url) in priority mode, where the
+            # budget cut IS the priority queue. A limit above the
+            # selection's size keeps every row, so no count job decides it.
+            sel = sel.orderBy(*trunc_order).limit(remaining)
+        order = ([batch_shuffle_key(self.seed, rnd).alias("_order")]
+                 if self.collect_debug else [])
+        batch = self._with_robots(sel).select(
+            *FRONTIER.fieldNames(), "_robots",
+            _md5_partition().alias("_part"), *order).toArrow()
+        return _Round(rnd, pages_count, fsize, use_bloom, t0, batch,
+                      self.spark.createDataFrame(batch))
 
     def _with_robots(self, df: DataFrame) -> DataFrame:
         """Robots gating (north rule; permissive default = no-op): path =
@@ -569,64 +591,46 @@ class CrawlEngine:
         # shuffled or sorted, and extraction parallelism = scan splits.
         # (A sel-preserving outer join here would force a SortMergeJoin
         # that shuffles the fetched rows WITH their html payloads — the
-        # "missing" rows are instead reconstructed below by a broadcast
-        # anti-join of the tiny batch against the tiny hit-url set.)
-        # Project to the fetch-relevant columns BEFORE the persist so the
-        # parquet scan prunes the heavy unused ones (text/warc_ts/lang)
-        # and the cache holds only what the round consumes.
+        # "missing" rows are instead the batch rows no fetched row
+        # matched, found on the driver by the tail.)
+        # Project to the fetch-relevant columns first so the parquet scan
+        # prunes the heavy unused ones (text/warc_ts/lang).
         fetch_cols = self.pages.select(
             "url", "html", "content_type", "status", "body_marker"
         )
-        fetched = self._with_robots(
-            fetch_cols.join(F.broadcast(st.sel), "url", "inner"))
+        fetched = fetch_cols.join(F.broadcast(st.sel), "url", "inner")
 
         # -- gate classification (C11/C12) as native exprs -------------------
         ct = F.trim(F.split(F.coalesce("content_type", F.lit("text/html")), ";")[0])
         marker = F.coalesce("body_marker", F.lit(""))
         # NOTE: no html.isNull() branch — the inner fetch join guarantees a
         # page row (pages.html is non-nullable), and referencing html here
-        # would drag the whole html column into the pruned metrics re-scan
+        # would drag the whole html column into the pruned outcome re-scan
         outcome = (
-            F.when(F.col("_robots"), F.lit("robots_blocked"))
-            .when(~ct.isin(*ALLOWED_CONTENT_TYPES), F.lit("skipped_ct"))
+            F.when(F.col("_robots"), F.lit(ROBOTS))
+            .when(~ct.isin(*ALLOWED_CONTENT_TYPES), F.lit(SKIPPED_CT))
             .when(
                 (F.col("status") == 403) | marker.contains("403 Forbidden"),
-                F.lit("failed"),
+                F.lit(FAILED),
             )
             .when(
                 marker.contains("Cloudflare")
                 & marker.contains("Worker threw exception"),
-                F.lit("failed"),
+                F.lit(FAILED),
             )
-            .otherwise(F.lit("success"))
+            .otherwise(F.lit(SUCCESS))
         )
         fetched = fetched.withColumn("outcome", outcome)
-        # persist only the SLIM columns (outcome lineage): caching the html
-        # payloads would force a multi-GB in-memory materialization per
-        # round (GC churn); the metrics pass re-runs the scan+join
-        # instead, which parquet column-pruning makes nearly free (it never
-        # reads the html column)
-        st.fetched_slim = fetched.select("url", "host", "round", "outcome").persist()
-
-        # batch urls absent from pages ("missing" fetches): reconstructed
-        # via broadcast anti-join of two batch-sized inputs (robots still
-        # precedes the fetch attempt, matching the gate order above)
-        missing = st.sel.join(F.broadcast(st.fetched_slim.select("url")),
-                              "url", "left_anti")
-        missing = self._with_robots(missing).withColumn(
-            "outcome",
-            F.when(F.col("_robots"), F.lit("robots_blocked"))
-            .otherwise(F.lit("missing")),
-        )
-        st.outcome_rows = st.fetched_slim.select("url", "outcome").unionByName(
-            missing.select("url", "outcome")
-        )
-        st.outcome_hosts = st.fetched_slim.select("host", "outcome").unionByName(
-            missing.select("host", "outcome")
-        )
+        # the SLIM outcome columns, collected once by the tail: the pruned
+        # re-scan never reads the html column, so it costs far less than
+        # caching the html payloads of the fetch would. _part (and
+        # _order) are the batch's own columns, carried by the join.
+        st.fetched_slim = fetched.select(
+            "url", "host", "_part", *(["_order"] if self.collect_debug else []),
+            "outcome")
 
         # -- extraction (C15) on successes only ------------------------------
-        succ = fetched.filter(F.col("outcome") == "success")
+        succ = fetched.filter(F.col("outcome") == SUCCESS)
         st.extracted = succ.select(
             "url",
             F.col("round").alias("_disc_round"),
@@ -662,16 +666,11 @@ class CrawlEngine:
             analyses, "append", {"round": st.rnd}, coalesce=n_out,
             shuffle=False,
         )
-        if st.obs_sel is not None:
-            # the commit job materialized sel (broadcast build), firing the
-            # observation exactly once before the cache takes over
-            st.n_sel = _obs_count(st.obs_sel, st.sel)
 
     def _expand(self, st: _Round) -> None:
-        """Expansion (C17 explode → C4 seen dedup). Candidate/new counts
-        ride the tail's frontier-commit job as Observations (zero extra
-        Spark jobs; the metrics are exact because the commit materializes
-        both plans exactly once through the persisted DFs)."""
+        """Expansion (C17 explode → C4 seen dedup). The candidate count
+        rides the dedup's first job as an Observation; `new` is left
+        lazy for the tail's one collect."""
         links = st.extracted.select(F.explode("ex.links").alias("url"))
         links = links.withColumn("host", F.lower(F.parse_url("url", F.lit("HOST"))))
         links = links.filter(F.col("host").isNotNull() & (F.col("host") != ""))
@@ -680,96 +679,81 @@ class CrawlEngine:
             .observe(st.obs_cand, F.count(F.lit(1)).alias("n"))
             .persist()
         )
-        new, st.flagged = self._dedup(st.cand, st.use_bloom)
-        st.new = new.observe(st.obs_new, F.count(F.lit(1)).alias("n")).persist()
+        st.new, st.flagged = self._dedup(st.cand, st.use_bloom)
 
     def _tail(self, st: _Round) -> None:
-        """The round's independent tail jobs, submitted together: they
-        share only the persisted sel/fetched_slim/cand/new frames, so
-        overlapping them removes the constant serial tail that otherwise
-        caps scaling — at 4N cores the extract stage shrinks but 3-6 x
-        ~1 s of back-to-back small jobs would not."""
-        from concurrent.futures import ThreadPoolExecutor
-
-        jobs = {"frontier": self._commit_frontier, "seen": self._commit_seen,
-                "metrics": self._metrics_rows}
-        if st.use_bloom:
-            jobs["bloom"] = self._extend_bloom
-        if self.adaptive_rate:
-            jobs["host_stats"] = self._commit_host_stats
+        """The round's independent tail jobs, submitted together to one
+        thread pool (each carries the caller's job group and tags). The
+        round's deltas are driver work: the outcome rows are collected
+        once and aggregated in Python (metrics, host_stats); `new` is
+        collected once and appended to frontier and seen with
+        ``commit_rows``; frontier_removed comes from the selected batch.
+        host_edges is the one Spark write."""
+        jobs = [self._collect_outcomes, self._commit_new_rows]
         if self.priority_frontier:
-            jobs["host_edges"] = self._commit_host_edges
+            jobs.append(self._commit_host_edges)
         with ThreadPoolExecutor(max_workers=len(jobs)) as pool:
-            futs = {name: pool.submit(fn, st) for name, fn in jobs.items()}
-            out = {name: fut.result() for name, fut in futs.items()}
-        st.part_rows = out["metrics"]
-        if st.use_bloom:
-            self._bloom = out["bloom"]
-
-    def _commit_frontier(self, st: _Round) -> None:
-        # O(round delta): append the discovered rows; log the fetched
-        # urls as removals (Iceberg MERGE/positional-delete analog — no
-        # O(frontier) rewrite)
-        self.store.table("frontier").commit(
-            st.new.select("url", "host", F.lit(st.rnd + 1).alias("depth"),
-                          F.lit(st.rnd + 1).alias("round")),
-            "append", {"round": st.rnd}, coalesce=self.io_coalesce,
-        )
-        self.store.table("frontier_removed").commit(
-            st.sel.select("url", F.lit(st.rnd).alias("round")),
-            "append", {"round": st.rnd}, coalesce=self.io_coalesce,
-        )
-
-    def _commit_seen(self, st: _Round) -> None:
-        self.store.table("seen").commit(
-            st.new.select(F.hash("url").alias("url_hash"), "url"),
-            "append", {"round": st.rnd}, coalesce=self.io_coalesce,
-        )
-
-    def _metrics_rows(self, st: _Round) -> list:
-        """Metrics (C20) per md5-partition lineage: one aggregation job,
-        per-partition outcome counts collected to the driver (≤256 rows
-        at any scale); round totals derived by summation."""
-        return (
-            st.outcome_rows.groupBy(_md5_partition().alias("partition"))
-            .agg(
-                F.count("*").alias("total"),
-                F.sum((F.col("outcome") == "success").cast("long")).alias("success"),
-                F.sum((F.col("outcome").isin("failed", "missing")).cast("long")).alias("failed"),
-                F.sum((F.col("outcome") == "skipped_ct").cast("long")).alias("skipped_ct"),
-                F.sum((F.col("outcome") == "robots_blocked").cast("long")).alias("robots_blocked"),
+            futs = [pool.submit(_in_caller_job_group(self.spark, fn), st)
+                    for fn in jobs]
+            # O(round delta) removal log: the fetched urls (Iceberg
+            # positional-delete analog — no O(frontier) rewrite)
+            self.store.table("frontier_removed").commit_rows(
+                pa.table({"url": st.batch["url"],
+                          "round": pa.array([st.rnd] * st.batch.num_rows,
+                                            pa.int32())}),
+                "append", {"round": st.rnd},
             )
-            .collect()
-        )
+            for fut in futs:
+                fut.result()
 
-    def _extend_bloom(self, st: _Round):
-        # incremental: only this round's new URLs are inserted (never a
-        # rebuild); reads the persisted `new` frame, so overlapping it
-        # with the commits at worst duplicates one cache fill
-        return self._bloom.add_df(st.new.select("url"))
+    def _collect_outcomes(self, st: _Round) -> None:
+        """Outcome rows of the whole batch: the fetched rows, collected
+        once, plus the batch rows no page matched ("missing", robots
+        still preceding the fetch attempt). Feeds the metrics and, in
+        adaptive mode, the host_stats append."""
+        st.outcomes = st.fetched_slim.toArrow().to_pylist()
+        hit = {r["url"] for r in st.outcomes}
+        for r in st.batch.to_pylist():
+            if r["url"] not in hit:
+                r["outcome"] = ROBOTS if r["_robots"] else MISSING
+                st.outcomes.append(r)
+        if self.adaptive_rate:
+            self._commit_host_stats(st)
+
+    def _commit_new_rows(self, st: _Round) -> None:
+        """`new` collected once (``url_hash`` still computed by Spark's
+        F.hash, so the bloom confirm's int-keyed probe keeps matching),
+        then appended to frontier and seen from the driver; in bloom mode
+        only these rows are inserted into the bloom (never a rebuild)."""
+        st.new_rows = new = st.new.select(
+            F.hash("url").alias("url_hash"), "url", "host").toArrow()
+        nxt = pa.array([st.rnd + 1] * new.num_rows, pa.int32())
+        self.store.table("frontier").commit_rows(
+            pa.table({"url": new["url"], "host": new["host"],
+                      "depth": nxt, "round": nxt}),
+            "append", {"round": st.rnd},
+        )
+        self.store.table("seen").commit_rows(
+            new.select(["url_hash", "url"]), "append", {"round": st.rnd})
+        if st.use_bloom:
+            self._bloom = self._bloom.add_df(
+                self.spark.createDataFrame(new.select(["url"])))
 
     def _commit_host_stats(self, st: _Round) -> None:
         # per-host aggregates feeding the NEXT round's AIMD caps
-        # (adaptive_caps_from_stats): one hash-agg over the cached slim
-        # outcome rows, host-dimension output. Only FETCH-HEALTH outcomes
-        # count as attempts: robots_blocked and skipped_ct are
-        # content/policy signals, not server-health ones — a host full of
+        # (adaptive_caps_from_stats). Only FETCH-HEALTH outcomes count as
+        # attempts: robots_blocked and skipped_ct are content/policy
+        # signals, not server-health ones — a host full of
         # robots-disallowed or non-HTML URLs must not be throttled to
         # cap 1 when no request ever failed
-        agg = (
-            st.outcome_hosts
-            .filter(~F.col("outcome").isin("robots_blocked", "skipped_ct"))
-            .groupBy("host")
-            .agg(
-                F.count(F.lit(1)).alias("attempts"),
-                F.sum((F.col("outcome") == "success").cast("long"))
-                .alias("successes"),
-            )
-            .select("host", F.lit(st.rnd).alias("round"),
-                    "attempts", "successes")
-        )
-        self.store.table("host_stats").commit(
-            agg, "append", {"round": st.rnd}, coalesce=self.io_coalesce
+        attempts, successes = Counter(), Counter()
+        for r in st.outcomes:
+            if r["outcome"] not in (ROBOTS, SKIPPED_CT):
+                attempts[r["host"]] += 1
+                successes[r["host"]] += r["outcome"] == SUCCESS
+        self.store.table("host_stats").commit_rows(
+            [(h, st.rnd, n, successes[h]) for h, n in sorted(attempts.items())],
+            "append", {"round": st.rnd},
         )
 
     def _commit_host_edges(self, st: _Round) -> None:
@@ -797,11 +781,15 @@ class CrawlEngine:
 
     def _record(self, st: _Round) -> RoundInfo:
         """Metrics and round_state: round_state, committed last, is the
-        round's durability barrier (resume reads only it)."""
+        round's durability barrier (resume reads only it). Metrics (C20)
+        are outcome counts per md5-partition lineage (≤256 rows at any
+        scale), aggregated from the collected outcome rows; the round
+        totals are their sums."""
         rnd = st.rnd
+        n_sel = st.batch.num_rows
         n_cand = _obs_count(st.obs_cand, st.cand)
         self._last_n_cand = n_cand
-        n_new = _obs_count(st.obs_new, st.new)
+        n_new = st.new_rows.num_rows
         if self._seen_rows is not None:
             # auto mode's incremental seen-size tracker (no count job)
             self._seen_rows += n_new
@@ -809,58 +797,50 @@ class CrawlEngine:
             # watermark advances to the seen snapshot that carries exactly
             # the rows just inserted (committed by the tail)
             self._bloom_wm = self.store.table("seen").current_snapshot_id()
-        rows = st.part_rows
-        n_succ = sum(r["success"] for r in rows)
+        # per partition: total, success, failed (incl. missing),
+        # skipped_ct, robots_blocked
+        col = {SUCCESS: 1, FAILED: 2, MISSING: 2, SKIPPED_CT: 3, ROBOTS: 4}
+        parts: dict[str, list[int]] = {}
+        for r in st.outcomes:
+            c = parts.setdefault(r["_part"], [0] * 5)
+            c[0] += 1
+            c[col[r["outcome"]]] += 1
+        totals = [sum(c[i] for c in parts.values()) for i in range(5)]
+        n_succ = totals[1]
         wall_ms = int((time.monotonic() - st.t0) * 1000)
-        metric_tuples = [
-            (rnd, r["partition"], r["total"], r["success"], r["failed"],
-             r["skipped_ct"], r["robots_blocked"], 0, 0, 0)
-            for r in rows
-        ]
-        metric_tuples.append((
-            rnd, "__round__", st.n_sel, n_succ,
-            sum(r["failed"] for r in rows),
-            sum(r["skipped_ct"] for r in rows),
-            sum(r["robots_blocked"] for r in rows),
-            n_cand - n_new, n_new, wall_ms,
-        ))
+        metric_tuples = [(rnd, p, *c, 0, 0, 0) for p, c in sorted(parts.items())]
+        metric_tuples.append((rnd, "__round__", n_sel, *totals[1:],
+                              n_cand - n_new, n_new, wall_ms))
         # tiny control tables: driver-side pyarrow commits (no Spark jobs)
         self.store.table("metrics").commit_rows(
             metric_tuples, "append", {"round": rnd}
         )
         self.store.table("round_state").commit_rows(
-            [(rnd, st.pages_count + st.n_sel, rnd, self.seed)],
+            [(rnd, st.pages_count + n_sel, rnd, self.seed)],
             "replace", {"round": rnd},
         )
-        self._state_cache = (rnd + 1, st.pages_count + st.n_sel)
-        self._frontier_size = st.fsize - st.n_sel + n_new
+        self._state_cache = (rnd + 1, st.pages_count + n_sel)
+        self._frontier_size = st.fsize - n_sel + n_new
 
         info = RoundInfo(
-            round=rnd, selected=st.n_sel, success=n_succ, new_urls=n_new,
+            round=rnd, selected=n_sel, success=n_succ, new_urls=n_new,
             dedup_dropped=n_cand - n_new, wall_ms=wall_ms,
         )
         if self.logger is not None:
             # main.rs per-batch summary shape: totals + rate
             self.logger.add_entry(
-                f"round {rnd}: selected={st.n_sel} success={n_succ} "
+                f"round {rnd}: selected={n_sel} success={n_succ} "
                 f"new_urls={n_new} dedup_dropped={n_cand - n_new} "
                 f"wall_ms={wall_ms} "
-                f"pages_per_sec={st.n_sel / max(wall_ms, 1) * 1000:.1f}"
+                f"pages_per_sec={n_sel / max(wall_ms, 1) * 1000:.1f}"
             )
         if self.collect_debug:
-            from .operators.politeness import batch_shuffle_key
-
-            ordered = (
-                st.outcome_rows.select(
-                    "url", "outcome",
-                    batch_shuffle_key(self.seed, rnd).alias("_k"),
-                )
-                .orderBy("_k")
-                .collect()
-            )
+            # fetch order = the pinned seeded shuffle (_order, from
+            # operators/politeness.py batch_shuffle_key)
+            ordered = sorted(st.outcomes, key=lambda r: r["_order"])
             info.selected_urls = [r["url"] for r in ordered]
             info.outcomes = {r["url"]: r["outcome"] for r in ordered}
-            info.new_url_list = [r["url"] for r in st.new.orderBy("url").collect()]
+            info.new_url_list = sorted(st.new_rows["url"].to_pylist())
         return info
 
     def _maintain(self, st: _Round) -> None:

@@ -237,7 +237,7 @@ class BloomShards:
                 src = src.repartition(sc.defaultParallelism)
         partials = src.mapInPandas(build, "shard_id int, blob binary")
 
-        def merge(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        def merge(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
             arr = np.frombuffer(pdf["blob"].iloc[0], dtype=np.uint8).copy()
             for b in pdf["blob"].iloc[1:]:
                 arr |= np.frombuffer(b, dtype=np.uint8)

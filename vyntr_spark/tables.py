@@ -33,6 +33,7 @@ import uuid
 from dataclasses import dataclass, field
 from typing import Any
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
@@ -140,6 +141,15 @@ ROUND_STATE = T.StructType(
 # Snapshot store
 # --------------------------------------------------------------------------
 
+# Spark → Arrow types of the driver-side commit path (commit_rows)
+_PA = {
+    T.StringType(): pa.string(),
+    T.IntegerType(): pa.int32(),
+    T.LongType(): pa.int64(),
+    T.DoubleType(): pa.float64(),
+    T.BooleanType(): pa.bool_(),
+}
+
 
 @dataclass
 class Snapshot:
@@ -217,33 +227,30 @@ class SnapshotTable:
         return self._commit_snapshot(
             mode, summary, lambda path: df.write.mode("overwrite").parquet(path))
 
-    def commit_rows(self, rows: list[tuple], mode: str = "append",
+    def commit_rows(self, rows: list[tuple] | pa.Table, mode: str = "append",
                     summary: dict[str, Any] | None = None) -> int:
-        """Driver-side commit of a small local row list via pyarrow — no
+        """Driver-side commit of batch-sized local rows via pyarrow — no
         Spark job. Same snapshot/manifest semantics as ``commit``; meant
-        for tiny control tables (metrics, round_state) where a distributed
-        write is pure scheduler overhead (the Iceberg analog is a
-        data-file append written by the committing process). Rows are
-        tuples in schema field order."""
-        import pyarrow as pa
+        for rows already on the driver (metrics, round_state, a crawl
+        round's frontier/seen deltas) where a distributed write is pure
+        scheduler overhead (the Iceberg analog is a data-file append
+        written by the committing process). ``rows`` is a list of tuples
+        in schema field order, or a ``pyarrow.Table`` holding the schema's
+        columns (cast to the schema's types, e.g. an int32 ``F.hash`` to
+        the long ``url_hash``)."""
         import pyarrow.parquet as pq
 
-        _PA = {
-            T.StringType(): pa.string(),
-            T.IntegerType(): pa.int32(),
-            T.LongType(): pa.int64(),
-            T.DoubleType(): pa.float64(),
-            T.BooleanType(): pa.bool_(),
-        }
         arrow_schema = pa.schema(
             [(f.name, _PA[f.dataType]) for f in self.schema.fields]
         )
-        cols = list(zip(*rows)) if rows else [[] for _ in self.schema.fields]
-        table = pa.table(
-            {f.name: pa.array(list(c), f_pa.type)
-             for (f, f_pa, c) in zip(self.schema.fields, arrow_schema, cols)},
-            schema=arrow_schema,
-        )
+        if isinstance(rows, pa.Table):
+            table = rows.select(arrow_schema.names).cast(arrow_schema)
+        else:
+            cols = list(zip(*rows)) if rows else [[] for _ in arrow_schema]
+            table = pa.table(
+                [pa.array(list(c), f.type) for f, c in zip(arrow_schema, cols)],
+                schema=arrow_schema,
+            )
 
         def write(path: str) -> None:
             os.makedirs(path, exist_ok=True)
